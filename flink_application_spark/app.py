@@ -13,10 +13,16 @@ flink.conf's so a reference operator can map their deployment 1:1):
   "dims":   {"imsi_msisdn": <path>, "ms_ip": <path>},
   "sink":   {"format": "parquet"|"console"|"memory", "path": ...,
              "checkpoint": ..., "partition_by": ["event_date","probe"],
-             "trigger": "20 seconds", "name": ...},
+             "trigger": "20 seconds", "name": ...,
+             "sink.rolling-policy.file-size": <bytes>},   # optional
   "dedup":  {"gap": "1 second", "watermark": "2 seconds"},
   "path_a_how": "inner" | "left"
 }
+
+A dim may also be a spec dict (the flink.conf translation's form);
+one with ``cache_ttl_ms`` routes a streaming parquet run through the
+TTL-refreshed foreachBatch path. ``trigger`` is a processing-time
+interval; None, "" and "availableNow" drain what is there and stop.
 
 Batch and streaming share the pipeline (streaming_enrichment works on
 both; its session dedup runs as a batch aggregation in batch mode).
@@ -34,12 +40,9 @@ from flink_application_spark.sources.streams import (
     file_stream,
     kafka_csv_stream,
 )
-from flink_application_spark.streaming.pipeline import streaming_enrichment
-from flink_application_spark.streaming.sinks import (
-    write_console,
-    write_memory,
-    write_partitioned_parquet,
-)
+# module handles, not names: attributes resolve at call time, so a
+# patched (e.g. instrumented) pipeline or sink function is what runs
+from flink_application_spark.streaming import pipeline, sinks
 
 
 def load_config(path_or_dict: str | dict[str, Any]) -> dict[str, Any]:
@@ -71,20 +74,23 @@ def _deep_merge(base: dict, overrides: dict) -> dict:
 def flink_conf_to_config(
     conf: dict[str, Any], overrides: dict[str, Any] | None = None
 ) -> dict[str, Any]:
-    """Map the reference's flink.conf structure (parsed HOCON —
-    `/root/reference/src/main/resources/flink.conf`, loaded by
-    `EnrichmentApp.java:38-43`) onto this package's pipeline config,
-    key for key:
+    """Map the reference's flink.conf structure (parsed HOCON — the
+    reference's `src/main/resources/flink.conf`, loaded by
+    `EnrichmentApp.java:38-43`) onto this package's pipeline config:
 
-    - ``kafka.*`` → streaming CSV-over-Kafka source (S1);
+    - ``kafka.*`` → streaming CSV-over-Kafka source (S1), including
+      ``failOnDataLoss``;
     - ``imsi_msisdn`` / ``ms_ip`` JDBC blocks → dimension specs, with
-      ``lookup.partial-cache.max-rows`` / ``expire-after-write``
-      carried through for the PartialLookupCache / RefreshingDim
-      layers (S3);
+      ``lookup.partial-cache.expire-after-write`` carried through as
+      ``cache_ttl_ms`` for the RefreshingDim path (S3);
     - ``hdfs.*`` → partitioned parquet sink with the byte-size rolling
-      policy (``fileSize = "110MB"`` → target_file_bytes, S4);
-    - ``checkpoint.interval`` / ``job.parallelism`` → runtime knobs
-      (R1/R2).
+      policy (``fileSize = "110MB"`` → target_file_bytes, S4).
+
+    Keys with no consumer here are not translated:
+    ``lookup.partial-cache.max-rows`` (RefreshingDim caches the whole
+    dim), ``checkpoint.interval`` (Spark commits a checkpoint every
+    micro-batch), ``job.parallelism`` (set by the session's master) and
+    the ``ms_ip_exploded`` block (the pipeline explodes ``ms_ip``).
 
     ``overrides`` deep-merges on top — the hermetic-test path swaps
     the live Kafka/Postgres endpoints for local files without touching
@@ -107,10 +113,7 @@ def flink_conf_to_config(
             "user": block.get("user"),
             "password": block.get("password"),
         }
-        max_rows = hocon_get(block, "lookup.partial-cache.max-rows")
         ttl = hocon_get(block, "lookup.partial-cache.expire-after-write")
-        if max_rows is not None:
-            spec["cache_max_rows"] = int(max_rows)
         if ttl is not None:
             spec["cache_ttl_ms"] = parse_duration_ms(ttl)
         return spec
@@ -132,16 +135,10 @@ def flink_conf_to_config(
         }
     cfg: dict[str, Any] = {
         "mode": "streaming",
-        "checkpoint_interval_ms": parse_duration_ms(
-            hocon_get(conf, "checkpoint.interval", 180_000)
-        ),
-        "parallelism": int(hocon_get(conf, "job.parallelism", 1)),
         "source": source_cfg,
         "dims": {
             "imsi_msisdn": _jdbc_dim_spec("imsi_msisdn"),
             "ms_ip": _jdbc_dim_spec("ms_ip"),
-            # the variant's pre-exploded dim (EnrichmentAppWithoutExplode)
-            "ms_ip_exploded": _jdbc_dim_spec("ms_ip_exploded"),
         },
         "sink": {
             "format": hdfs.get("format", "parquet"),
@@ -182,20 +179,15 @@ def compact_sink(spark: SparkSession, config: str | dict[str, Any]) -> int:
     disabled, empty, or nothing old enough)."""
     import os
 
-    from flink_application_spark.streaming.sinks import (
-        committed_batch_dirs,
-        compact_batches,
-    )
-
     cfg = load_config(config)
     sink = cfg.get("sink", {})
     if sink.get("format") != "parquet" or not sink.get("auto-compaction"):
         return 0
-    dirs = committed_batch_dirs(sink["path"])
+    dirs = sinks.committed_batch_dirs(sink["path"])
     bids = [int(os.path.basename(p).split("=", 1)[1]) for p in dirs]
     if not bids:
         return 0
-    return compact_batches(
+    return sinks.compact_batches(
         spark,
         sink["path"],
         min_live_batch=max(bids),
@@ -230,6 +222,12 @@ def build_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
     # flink.conf translation intact
     if (src.get("kafka") or {}).get("bootstrap") is not None:
         k = src["kafka"]
+        # flink.conf's failOnDataLoss is a Spark Kafka reader option
+        # verbatim; unset keeps Spark's default
+        extra = (
+            {} if k.get("failOnDataLoss") is None
+            else {"failOnDataLoss": str(k["failOnDataLoss"]).lower()}
+        )
         return kafka_csv_stream(
             spark,
             k["bootstrap"],
@@ -242,6 +240,7 @@ def build_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
                 # with a python-friendly alias
                 k.get("scan.startup.specific-offsets", k.get("specific_offsets"))
             ),
+            **extra,
         )
     if fmt == "csv-lines":
         if streaming:
@@ -303,7 +302,7 @@ def build_pipeline(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
     imsi_msisdn = _load_dim(spark, dims["imsi_msisdn"])
     ms_ip = _load_dim(spark, dims["ms_ip"])
     dd = cfg.get("dedup", {})
-    return streaming_enrichment(
+    return pipeline.streaming_enrichment(
         src,
         imsi_msisdn,
         ms_ip,
@@ -325,90 +324,63 @@ def run(spark: SparkSession, config: str | dict[str, Any]):
     within TTL — Flink's partial-cache contract, not the per-trigger
     rescan of a plain stream-static join."""
     cfg = load_config(config)
+    if cfg.get("mode", "batch") != "streaming":
+        return build_pipeline(spark, cfg)
     sink = cfg.get("sink", {"format": "console"})
-    if cfg.get("mode", "batch") == "streaming":
-        dims = cfg["dims"]
-        ttls = [
-            spec.get("cache_ttl_ms")
-            for spec in dims.values()
-            if isinstance(spec, dict)
-        ]
-        ttl_ms = next((t for t in ttls if t), None)
-        if ttl_ms and sink.get("format") == "parquet":
-            from flink_application_spark.streaming.pipeline import (
-                refreshing_enrichment_batch_fn,
+    fmt = sink.get("format", "console")
+    name = sink.get("name", "enrichment_sink")
+    part = tuple(sink.get("partition_by", ("event_date", "probe")))
+    trigger = sink.get("trigger", "20 seconds" if fmt == "parquet" else None)
+    ttl_ms = next(
+        (spec["cache_ttl_ms"] for spec in cfg["dims"].values()
+         if isinstance(spec, dict) and spec.get("cache_ttl_ms")),
+        None,
+    )
+    # flink.conf parity: sink.rolling-policy.file-size selects the
+    # byte-size-calibrated roller (flink.conf:54-55, 110 MB), with or
+    # without TTL dims
+    roll_bytes = sink.get("sink.rolling-policy.file-size")
+    if fmt == "parquet" and (ttl_ms or roll_bytes is not None):
+        if roll_bytes is not None:
+            write_fn = sinks.SizeCalibratedRoller(sink["path"], part, int(roll_bytes))
+        else:
+            write_fn = lambda df, bid: sinks.idempotent_batch_write(  # noqa: E731
+                df, sink["path"], bid, partition_by=part
             )
-            from flink_application_spark.streaming.sinks import (
-                SizeCalibratedRoller,
-                idempotent_batch_write,
-            )
-
-            dd = cfg.get("dedup", {})
-            part = tuple(sink.get("partition_by", ("event_date", "probe")))
-            # flink.conf parity on THIS path too (round-6 ADVICE): the
-            # rolling-policy file-size cap applies whether or not the
-            # dims carry a TTL — SizeCalibratedRoller commits through
-            # the same idempotent per-batch overwrite
-            roll_bytes = sink.get("sink.rolling-policy.file-size")
-            if roll_bytes is not None:
-                write_fn = SizeCalibratedRoller(sink["path"], part, int(roll_bytes))
-            else:
-                write_fn = lambda df, bid: idempotent_batch_write(  # noqa: E731
-                    df, sink["path"], bid, partition_by=part
-                )
-            fn = refreshing_enrichment_batch_fn(
+        if ttl_ms:
+            dims = cfg["dims"]
+            stream = build_source(spark, cfg)
+            batch_fn = pipeline.refreshing_enrichment_batch_fn(
                 lambda: _load_dim(spark, dims["imsi_msisdn"]),
                 lambda: _load_dim(spark, dims["ms_ip"]),
                 write_fn,
                 ttl_seconds=ttl_ms / 1000.0,
                 path_a_how=cfg.get("path_a_how", "inner"),
-                gap=dd.get("gap", "1 second"),
+                gap=cfg.get("dedup", {}).get("gap", "1 second"),
             )
-            writer = (
-                build_source(spark, cfg)
-                .writeStream.foreachBatch(fn)
-                .queryName(sink.get("name", "enrichment_sink"))
-                .option("checkpointLocation", sink["checkpoint"])
-            )
-            trigger = sink.get("trigger", "20 seconds")
-            if trigger:
-                writer = writer.trigger(processingTime=trigger)
-            else:
-                writer = writer.trigger(availableNow=True)
-            return writer.start()
+        else:
+            stream, batch_fn = build_pipeline(spark, cfg), write_fn
+        return (
+            stream.writeStream.foreachBatch(batch_fn)
+            .queryName(name)
+            .option("checkpointLocation", sink["checkpoint"])
+            .trigger(**sinks.trigger_kwargs(trigger))
+            .start()
+        )
     result = build_pipeline(spark, cfg)
-    if cfg.get("mode", "batch") != "streaming":
-        return result
-    fmt = sink.get("format", "console")
     if fmt == "parquet":
-        # flink.conf parity: sink.rolling-policy.file-size selects the
-        # byte-size-calibrated roller (flink.conf:54-55, 110 MB)
-        roll_bytes = sink.get("sink.rolling-policy.file-size")
-        if roll_bytes is not None:
-            from flink_application_spark.streaming.sinks import (
-                write_partitioned_parquet_size_rolled,
-            )
-
-            return write_partitioned_parquet_size_rolled(
-                result,
-                sink["path"],
-                checkpoint=sink["checkpoint"],
-                partition_by=tuple(sink.get("partition_by", ("event_date", "probe"))),
-                target_file_bytes=int(roll_bytes),
-                trigger=sink.get("trigger", "20 seconds"),
-                query_name=sink.get("name", "enrichment_sink"),
-            )
-        return write_partitioned_parquet(
+        # native file sink: its session dedup state spans micro-batches
+        return sinks.write_partitioned_parquet(
             result,
             sink["path"],
             checkpoint=sink["checkpoint"],
-            partition_by=tuple(sink.get("partition_by", ("event_date", "probe"))),
-            trigger=sink.get("trigger", "20 seconds"),
-            query_name=sink.get("name", "enrichment_sink"),
+            partition_by=part,
+            trigger=trigger,
+            query_name=name,
         )
     if fmt == "memory":
-        return write_memory(result, sink.get("name", "enrichment_out"), trigger=sink.get("trigger"))
-    return write_console(result, sink.get("name", "enrichment"), trigger=sink.get("trigger"))
+        return sinks.write_memory(result, name, trigger=trigger)
+    return sinks.write_console(result, name, trigger=trigger)
 
 
 def main(argv: list[str] | None = None) -> None:  # pragma: no cover - thin CLI

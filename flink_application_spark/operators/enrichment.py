@@ -18,19 +18,13 @@ from pyspark.sql import Column, DataFrame, functions as F
 # ---------------------------------------------------------------------------
 
 
-def extend_with_partition_cols(df: DataFrame, date_as_string: bool = False) -> DataFrame:
+def extend_with_partition_cols(df: DataFrame) -> DataFrame:
     """P1-P4: add `event_date` + `probe` derived columns.
 
     Reference: EnrichmentApp.java:206-214 (`CAST(start_time AS DATE)`,
-    `SUBSTRING(measuring_probe_name,1,2)`); the string-typed variant is
-    EnrichmentAppWithoutExplode.java:208 (`DATE_FORMAT(...,'yyyy-MM-dd')`).
+    `SUBSTRING(measuring_probe_name,1,2)`).
     """
-    event_date = (
-        F.date_format("start_time", "yyyy-MM-dd")
-        if date_as_string
-        else F.to_date("start_time")
-    )
-    return df.withColumn("event_date", event_date).withColumn(
+    return df.withColumn("event_date", F.to_date("start_time")).withColumn(
         "probe", F.substring("measuring_probe_name", 1, 2)
     )
 
@@ -98,7 +92,6 @@ def lookup_join(
     on: Column,
     project: dict[str, str],
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """J1/J2/J3: equi-join against a dimension, projecting renamed dim
     columns (`imsi AS _imsi` idiom, EnrichmentApp.java:281-298).
@@ -111,9 +104,7 @@ def lookup_join(
     100/1000-row lookup cache instead, flink.conf:37-38,47-48).
     """
     dim = dim_df.select(*[F.col(src).alias(dst) for dst, src in project.items()])
-    if broadcast_dim:
-        dim = F.broadcast(dim)
-    return stream_df.join(dim, on, how)
+    return stream_df.join(F.broadcast(dim), on, how)
 
 
 def theta_asof_candidates(
@@ -122,8 +113,6 @@ def theta_asof_candidates(
     equi_keys: list[tuple[str, str]],
     left_ts: str,
     right_ts: str,
-    how: str = "inner",
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """J4/J5: equi(probe,ip) + range (`left.ts >= right.ts`) join — the
     candidate-generation half of the as-of join
@@ -143,5 +132,4 @@ def theta_asof_candidates(
         c = left[lk] == right[rk]
         cond = c if cond is None else (cond & c)
     cond = cond & (left[left_ts] >= right[right_ts])
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, cond, how)
+    return left.join(F.broadcast(right), cond, "inner")

@@ -186,7 +186,13 @@ def _round_cells(scored: DataFrame) -> DataFrame:
                 for i, ev in enumerate(elist):
                     by_d.setdefault(len(ev), []).append(i)
                 for d, idxs in by_d.items():
-                    if d == 0:
+                    # a row shorter than d1 scores NULL (zip_with pads
+                    # it), so every residual is NULL: like the old
+                    # NULL-skipping sum it adds nothing — drop it
+                    rows = [rlist[i] for i in idxs]
+                    ok = ~np.isnan(np.array(rows, dtype=np.float64)).any(axis=1)
+                    idxs = [i for i, k in zip(idxs, ok) if k]
+                    if d == 0 or not idxs:
                         continue
                     R = np.array([rlist[i] for i in idxs], dtype=np.int64)
                     E = np.array([elist[i] for i in idxs], dtype=np.int64)

@@ -10,19 +10,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.asof import asof_join
 from flink_application_spark.operators.dedup import argmax_dedup
-from flink_application_spark.operators.enrichment import (
-    coalesce_enrich,
-    explode_delimited,
-    extend_with_partition_cols,
-    select_canonical,
-)
-from flink_application_spark.plans.cdr import (
-    _ASOF_ORDER_SPARK,
-    _PATH_B_ORACLE,
-    CANONICAL,
-    cdr_views,
-)
+from flink_application_spark.operators.enrichment import extend_with_partition_cols
+from flink_application_spark.plans.cdr import _PATH_B_ORACLE, cdr_views
 from flink_application_spark.plans.registry import register
+from flink_application_spark.streaming import pipeline
 
 
 @register(
@@ -38,18 +29,9 @@ from flink_application_spark.plans.registry import register
 )
 def q_path_b_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = cdr_views(spark, sf_dir)
-    src = extend_with_partition_cols(v["cdr_src"]).filter(F.col("imsi").isNull())
-    exploded = explode_delimited(src, "ms_ip_address", out_col="ip")
-    dim = explode_delimited(v["ms_ip"], "ms_ip_address", out_col="ip").select(
-        F.col("probe").alias("_probe"),
-        F.col("ip").alias("_ip"),
-        F.col("start_time").alias("_start_time"),
-        F.col("msisdn").alias("_msisdn"),
-        F.col("imsi").alias("_imsi"),
-    )
     best_per_ip = asof_join(
-        exploded,
-        dim,
+        pipeline.path_b_src(extend_with_partition_cols(v["cdr_src"])),
+        pipeline.ms_ip_dim(v["ms_ip"]),
         equi_keys=[("probe", "_probe"), ("ip", "_ip")],
         left_ts="start_time",
         right_ts="_start_time",
@@ -58,10 +40,8 @@ def q_path_b_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="inner",
     )
     # a CDR may explode to several IPs → reduce to the best match per id
-    best = argmax_dedup(best_per_ip, ["unique_cdr_id"], _ASOF_ORDER_SPARK)
-    return select_canonical(
-        coalesce_enrich(best, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
+    best = argmax_dedup(best_per_ip, ["unique_cdr_id"], pipeline._ASOF_ORDER_SPARK)
+    return pipeline.path_b_finish(best)
 
 
 @register(

@@ -22,14 +22,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.dedup import argmax_dedup
 from flink_application_spark.operators.enrichment import (
-    coalesce_enrich,
     explode_delimited,
     extend_with_partition_cols,
-    lookup_join,
-    select_canonical,
-    theta_asof_candidates,
 )
 from flink_application_spark.plans.registry import register
+from flink_application_spark.streaming import pipeline
+from flink_application_spark.streaming.pipeline import (  # noqa: F401 - re-exported
+    _ASOF_ORDER_SPARK,
+    CANONICAL,
+)
 
 # The reference generator's 15 probe codes (CsvData.java:49).
 PROBE_CODES = ["DE", "cl", "ek", "ir", "kg", "kh", "mn", "nn", "ns", "rd", "sp", "sr", "st", "vr", "yd"]
@@ -105,21 +106,6 @@ def cdr_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
-
-
-# Canonical output schema: src columns + partition columns
-# (EnrichmentApp.java:67, 118-123, 183-204).
-CANONICAL = [
-    "start_time",
-    "measuring_probe_name",
-    "imsi",
-    "msisdn",
-    "ms_ip_address",
-    "unique_cdr_id",
-    "event_date",
-    "probe",
-]
-
 
 
 # ---------------------------------------------------------------------------
@@ -229,17 +215,8 @@ def q_cdr_dim_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _path_a(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
     v = cdr_views(spark, sf_dir)
-    src = extend_with_partition_cols(v["cdr_src"]).filter(F.col("imsi").isNotNull())
-    joined = lookup_join(
-        src,
-        v["imsi_msisdn"],
-        on=F.col("imsi") == F.col("_imsi"),
-        project={"_imsi": "imsi", "_msisdn": "msisdn"},
-        how=how,
-    )
-    return select_canonical(
-        coalesce_enrich(joined, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
+    extended = extend_with_partition_cols(v["cdr_src"])
+    return pipeline.path_a(extended, v["imsi_msisdn"], how)
 
 
 def _path_a_body(join_kw: str) -> str:
@@ -285,10 +262,7 @@ def q_cdr_path_a_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _path_a(spark, sf_dir, "left")
 
 
-# Deterministic tie-break for the arg-max reduction (SURVEY §5: the
-# reference UDAF keeps the last-arrived row on ties — nondeterministic;
-# we declare the full ordering instead).
-_ASOF_ORDER_SPARK = ["_start_time", "_msisdn", "start_time", "ms_ip_address"]
+# The oracle's form of the arg-max tie-break (_ASOF_ORDER_SPARK).
 _ASOF_ORDER_ORACLE = (
     "d.start_time DESC NULLS LAST, d.msisdn DESC NULLS LAST, "
     "s.start_time DESC NULLS LAST, s.ms_ip_address DESC NULLS LAST"
@@ -297,26 +271,11 @@ _ASOF_ORDER_ORACLE = (
 
 def _path_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = cdr_views(spark, sf_dir)
-    src = extend_with_partition_cols(v["cdr_src"]).filter(F.col("imsi").isNull())
-    exploded = explode_delimited(src, "ms_ip_address", out_col="ip")
-    dim = explode_delimited(v["ms_ip"], "ms_ip_address", out_col="ip").select(
-        F.col("start_time").alias("_start_time"),
-        F.col("imsi").alias("_imsi"),
-        F.col("msisdn").alias("_msisdn"),
-        F.col("probe").alias("_probe"),
-        F.col("ip").alias("_ip"),
-    )
-    candidates = theta_asof_candidates(
-        exploded,
-        dim,
-        equi_keys=[("probe", "_probe"), ("ip", "_ip")],
-        left_ts="start_time",
-        right_ts="_start_time",
+    candidates = pipeline.path_b_candidates(
+        extend_with_partition_cols(v["cdr_src"]), v["ms_ip"]
     )
     best = argmax_dedup(candidates, ["unique_cdr_id"], _ASOF_ORDER_SPARK)
-    return select_canonical(
-        coalesce_enrich(best, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
+    return pipeline.path_b_finish(best)
 
 
 _PATH_B_CTES = f"""

@@ -10,8 +10,9 @@ The aggregate is incremental (partial + final merge, exactly like the
 reference UDAF's add/merge at :384-402) and runs in the streaming
 state store. Event-time + watermark replaces Flink's processing-time
 trigger — deterministic and replayable, which proc-time windows are
-not (SURVEY §7.4 hard-part #1). `dropDuplicatesWithinWatermark` is the
-bounded-state alternative when only row identity (not arg-max) matters.
+not (SURVEY §7.4 hard-part #1). Spark's own
+`dropDuplicatesWithinWatermark` is the bounded-state alternative when
+only row identity (not arg-max) matters.
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ def session_argmax_dedup(
     ts_col: str = "proc_time",
     gap: str = "1 second",
     watermark_delay: str = "2 seconds",
-    keep_window: bool = False,
 ) -> DataFrame:
     """Per (session window, key), keep the row maximizing `order_col`.
 
@@ -39,22 +39,8 @@ def session_argmax_dedup(
     if is_streaming:
         df = df.withWatermark(ts_col, watermark_delay)
     order = F.col(order_col) if isinstance(order_col, str) else order_col
-    agg = (
+    return (
         df.groupBy(F.session_window(F.col(ts_col), gap).alias("session"), *key_cols)
         .agg(F.max_by(F.struct(*payload), order).alias("_best"))
+        .select("_best.*")
     )
-    cols = (["session.start", "session.end"] if keep_window else []) + ["_best.*"]
-    out = agg.select(*cols)
-    # the window-keyed variant exposes session bounds for tests
-    return out
-
-
-def drop_duplicates_within_watermark(
-    df: DataFrame, key_cols: list[str], ts_col: str, delay: str = "10 seconds"
-) -> DataFrame:
-    """Bounded-state exact dedup: first row per key wins, state expires
-    with the watermark (the late-straggler policy SURVEY §7.4 #5 calls
-    for — the reference has no late-data story at all)."""
-    if df.isStreaming:
-        return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(key_cols)
-    return df.dropDuplicates(key_cols)

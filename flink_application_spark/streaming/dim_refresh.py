@@ -8,10 +8,12 @@ reference when the trigger is shorter than 60 s, but it re-reads the
 dim even when a cached copy would do, and with a long trigger there is
 no way to pin a *minimum* freshness.
 
-`RefreshingDim` closes that gap with the `foreachBatch` pattern: the
-dim is loaded once, eagerly local-checkpointed (materialized to
-executor-local blocks with lineage truncated), and reloaded only when
-its wall-clock age exceeds `ttl_seconds` at a micro-batch boundary.
+`RefreshingDim` closes that gap inside a `foreachBatch` function
+(`pipeline.refreshing_enrichment_batch_fn` calls `get()` once per
+micro-batch): the dim is loaded once, eagerly local-checkpointed
+(materialized to executor-local blocks with lineage truncated), and
+reloaded only when its wall-clock age exceeds `ttl_seconds` at a
+micro-batch boundary.
 This is exactly the reference's expire-after-write cache, at batch
 granularity — the only granularity at which Spark's execution model
 can swap a join input.
@@ -64,16 +66,3 @@ class RefreshingDim:
             self._loaded_at = now
             self.refresh_count += 1
         return self._df
-
-    def foreach_batch(
-        self,
-        join_fn: Callable[[DataFrame, DataFrame], DataFrame],
-        write_fn: Callable[[DataFrame, int], None],
-    ) -> Callable[[DataFrame, int], None]:
-        """Build a `foreachBatch` function: each micro-batch is joined
-        against the TTL-cached dim snapshot and handed to `write_fn`."""
-
-        def _process(batch_df: DataFrame, batch_id: int) -> None:
-            write_fn(join_fn(batch_df, self.get()), batch_id)
-
-        return _process

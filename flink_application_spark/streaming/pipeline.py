@@ -11,10 +11,12 @@ Topology (EnrichmentApp.run(), :59-110):
                          → session-window arg-max (W1/W2)
       → unionByName → canonical schema → sink     (S4/S5, R4)
 
-The batch pipeline in ``plans/cdr.py`` shares every operator; only the
-dedup stage differs (streaming session window with watermark vs batch
-window-rank) — tests assert batch output ≡ stream output on the same
-input (SURVEY §5 batch-vs-stream equivalence).
+This module writes the topology once: ``path_a``, ``path_b_candidates``
+and ``path_b_finish`` are the stages, and the batch registry queries in
+``plans/cdr.py`` call them too. Only the dedup stage differs
+(streaming session window with watermark here vs batch window-rank
+there) — tests assert batch output ≡ stream output on the same input
+(SURVEY §5 batch-vs-stream equivalence).
 """
 
 from __future__ import annotations
@@ -30,8 +32,77 @@ from flink_application_spark.operators.enrichment import (
     theta_asof_candidates,
     with_proc_time,
 )
-from flink_application_spark.plans.cdr import _ASOF_ORDER_SPARK, CANONICAL
 from flink_application_spark.streaming.dedup import session_argmax_dedup
+
+# Canonical output schema: src columns + partition columns
+# (EnrichmentApp.java:67, 118-123, 183-204).
+CANONICAL = [
+    "start_time",
+    "measuring_probe_name",
+    "imsi",
+    "msisdn",
+    "ms_ip_address",
+    "unique_cdr_id",
+    "event_date",
+    "probe",
+]
+
+# Deterministic tie-break for the arg-max reduction (SURVEY §5: the
+# reference UDAF keeps the last-arrived row on ties — nondeterministic;
+# we declare the full ordering instead).
+_ASOF_ORDER_SPARK = ["_start_time", "_msisdn", "start_time", "ms_ip_address"]
+
+_WRITEBACK = {"imsi": "_imsi", "msisdn": "_msisdn"}
+
+
+def path_a(extended: DataFrame, imsi_msisdn: DataFrame, how: str = "inner") -> DataFrame:
+    """Path A: imsi present → lookup-join imsi_msisdn, coalesce
+    writeback, canonical projection (EnrichmentApp.java:70-78, 300-318)."""
+    joined = lookup_join(
+        extended.filter(F.col("imsi").isNotNull()),
+        imsi_msisdn,
+        on=F.col("imsi") == F.col("_imsi"),
+        project={"_imsi": "imsi", "_msisdn": "msisdn"},
+        how=how,
+    )
+    return select_canonical(coalesce_enrich(joined, _WRITEBACK), CANONICAL)
+
+
+def path_b_src(extended: DataFrame) -> DataFrame:
+    """Path B input: imsi-missing rows, one per IP of their list."""
+    return explode_delimited(
+        extended.filter(F.col("imsi").isNull()), "ms_ip_address", out_col="ip"
+    )
+
+
+def ms_ip_dim(ms_ip: DataFrame) -> DataFrame:
+    """The as-of dimension: ms_ip exploded per IP, columns renamed to
+    the ``_``-prefixed join side (EnrichmentApp.java:320-340)."""
+    return explode_delimited(ms_ip, "ms_ip_address", out_col="ip").select(
+        F.col("start_time").alias("_start_time"),
+        F.col("imsi").alias("_imsi"),
+        F.col("msisdn").alias("_msisdn"),
+        F.col("probe").alias("_probe"),
+        F.col("ip").alias("_ip"),
+    )
+
+
+def path_b_candidates(extended: DataFrame, ms_ip: DataFrame) -> DataFrame:
+    """Path B candidates: every dim assignment on the same (probe, ip)
+    active at or before the CDR's start_time. Reduce per
+    ``unique_cdr_id`` by ``_ASOF_ORDER_SPARK``, then ``path_b_finish``."""
+    return theta_asof_candidates(
+        path_b_src(extended),
+        ms_ip_dim(ms_ip),
+        equi_keys=[("probe", "_probe"), ("ip", "_ip")],
+        left_ts="start_time",
+        right_ts="_start_time",
+    )
+
+
+def path_b_finish(best: DataFrame) -> DataFrame:
+    """Path B after the arg-max: coalesce writeback + canonical projection."""
+    return select_canonical(coalesce_enrich(best, _WRITEBACK), CANONICAL)
 
 
 def streaming_enrichment(
@@ -53,39 +124,9 @@ def streaming_enrichment(
     makes the stream replayable (proc-time wall clocks are not).
     """
     extended = extend_with_partition_cols(src)
-
-    # Path A — imsi present
-    a = lookup_join(
-        extended.filter(F.col("imsi").isNotNull()),
-        imsi_msisdn,
-        on=F.col("imsi") == F.col("_imsi"),
-        project={"_imsi": "imsi", "_msisdn": "msisdn"},
-        how=path_a_how,
-    )
-    a = select_canonical(
-        coalesce_enrich(a, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
-
-    # Path B — imsi missing
-    exploded = explode_delimited(
-        extended.filter(F.col("imsi").isNull()), "ms_ip_address", out_col="ip"
-    )
-    dim = explode_delimited(ms_ip, "ms_ip_address", out_col="ip").select(
-        F.col("start_time").alias("_start_time"),
-        F.col("imsi").alias("_imsi"),
-        F.col("msisdn").alias("_msisdn"),
-        F.col("probe").alias("_probe"),
-        F.col("ip").alias("_ip"),
-    )
-    candidates = theta_asof_candidates(
-        exploded,
-        dim,
-        equi_keys=[("probe", "_probe"), ("ip", "_ip")],
-        left_ts="start_time",
-        right_ts="_start_time",
-    )
     candidates = with_proc_time(
-        candidates, clock if clock is not None else F.col("start_time")
+        path_b_candidates(extended, ms_ip),
+        clock if clock is not None else F.col("start_time"),
     )
     best = session_argmax_dedup(
         candidates,
@@ -95,11 +136,7 @@ def streaming_enrichment(
         gap=gap,
         watermark_delay=watermark_delay,
     )
-    b = select_canonical(
-        coalesce_enrich(best, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
-
-    return a.unionByName(b)
+    return path_a(extended, imsi_msisdn, path_a_how).unionByName(path_b_finish(best))
 
 
 def refreshing_enrichment_batch_fn(

@@ -1,4 +1,4 @@
-"""Streaming sinks + runner policies (SURVEY §2.1 S4/S5/S6/S8, §2.6 R1/R4).
+"""Streaming sinks + runner policies (SURVEY §2.1 S4/S5/S6, §2.6 R1/R4).
 
 Reference sink surface: labeled console print (EnrichmentApp.java:
 97-103), partitioned parquet on HDFS with a rolling policy
@@ -11,19 +11,21 @@ Spark mapping: the micro-batch trigger plays the rollover-interval
 role (one file per partition per batch); `maxRecordsPerFile`
 approximates the size cap; `checkpointLocation` is per-query exactly
 like Flink's per-job checkpoint path. Two-queries-one-path fights over
-the committer, so multi-sink fan-in is union-before-write (R4).
+the committer, so multi-sink fan-in is union-before-write (R4): the
+enrichment's two paths meet in one ``unionByName`` before the sink
+(streaming/pipeline.py).
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 
 def trigger_kwargs(trigger: str | None) -> dict:
-    if trigger is None or trigger == "availableNow":
+    """``DataStreamWriter.trigger`` kwargs: a processing-time interval,
+    or availableNow for None, "" and "availableNow"."""
+    if not trigger or trigger == "availableNow":
         return {"availableNow": True}
     return {"processingTime": trigger}
 
@@ -493,36 +495,6 @@ def _has_aggregation(df: DataFrame) -> bool:
     # detect plain (un-watermarked) aggregates that need complete mode.
     plan = df._jdf.queryExecution().logical().toString()
     return "Aggregate" in plan and "EventTimeWatermark" not in plan
-
-
-def write_kafka_csv(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint: str,
-    transactional_id_prefix: str | None = None,
-    trigger: str | None = None,
-) -> StreamingQuery:
-    """S8: Kafka producer sink (Generator.java:51-64 — string serializer,
-    transactional-id prefix). Expects a `value` column (use
-    csv_decode.encode_csv_value). Untestable without a broker."""
-    writer = (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger_kwargs(trigger))
-    )
-    if transactional_id_prefix is not None:
-        writer = writer.option("kafka.transactional.id", transactional_id_prefix)
-    return writer.start()
-
-
-def fanout_union(dfs: list[DataFrame]) -> DataFrame:
-    """S6/R4: route N result streams into ONE sink — union-before-write
-    keeps a single committer on the output path (the Spark-safe form of
-    the reference's two INSERTs into one sink table)."""
-    return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
 def with_pipeline_metrics(df: DataFrame, name: str = "pipeline_metrics") -> DataFrame:

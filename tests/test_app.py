@@ -175,14 +175,16 @@ def test_flink_conf_builds_and_runs_pipeline(spark, app_dirs, tmp_path):
             "dedup": {"gap": "36500 days", "watermark": "0 seconds"},
         },
     )
-    # translation carries the reference's own values
-    assert cfg["checkpoint_interval_ms"] == 180_000
-    assert cfg["parallelism"] == 1
+    # translation carries the reference's own values; keys nothing
+    # reads (max-rows, checkpoint interval, parallelism, the
+    # pre-exploded dim) are not translated
     assert cfg["sink"]["partition_by"] == ["event_date", "probe"]
     assert cfg["sink"]["sink.rolling-policy.file-size"] == 110 * 1024 * 1024
-    assert cfg["dims"]["imsi_msisdn"]["cache_max_rows"] == 100
     assert cfg["dims"]["imsi_msisdn"]["cache_ttl_ms"] == 60_000
-    assert cfg["dims"]["ms_ip_exploded"]["cache_max_rows"] == 1000
+    assert cfg["dims"]["ms_ip"]["cache_ttl_ms"] == 60_000
+    assert set(cfg["dims"]) == {"imsi_msisdn", "ms_ip"}
+    assert "cache_max_rows" not in cfg["dims"]["imsi_msisdn"]
+    assert not {"checkpoint_interval_ms", "parallelism"} & set(cfg)
     assert cfg["source"]["kafka"] is None  # override took
     # and the pipeline built from it runs
     out = build_pipeline(spark, cfg)
@@ -190,22 +192,22 @@ def test_flink_conf_builds_and_runs_pipeline(spark, app_dirs, tmp_path):
     assert set(out.columns) >= {"imsi", "msisdn", "event_date", "probe"}
 
 
-def test_streaming_ttl_dims_via_config(spark, app_dirs, tmp_path):
-    """Dims with cache_ttl_ms (the flink.conf translation's output)
-    route streaming runs through the RefreshingDim foreachBatch path —
-    output matches the plain stream-static wiring on a static dim."""
-    cfg = {
+def _ttl_cfg(root, tmp_path, **sink):
+    """Streaming config whose imsi_msisdn dim carries a TTL (the
+    flink.conf translation's shape); ``sink`` keys add to an
+    availableNow parquet sink under ``tmp_path``."""
+    return {
         "mode": "streaming",
-        "source": {"format": "parquet", "path": str(app_dirs / "src")},
+        "source": {"format": "parquet", "path": str(root / "src")},
         "dims": {
             "imsi_msisdn": {
                 "format": "jdbc",
-                "parquet_fallback": str(app_dirs / "imsi_msisdn"),
+                "parquet_fallback": str(root / "imsi_msisdn"),
                 "cache_ttl_ms": 60_000,
             },
             "ms_ip": {
                 "format": "jdbc",
-                "parquet_fallback": str(app_dirs / "ms_ip"),
+                "parquet_fallback": str(root / "ms_ip"),
             },
         },
         "dedup": {"gap": "36500 days"},
@@ -214,10 +216,16 @@ def test_streaming_ttl_dims_via_config(spark, app_dirs, tmp_path):
             "path": str(tmp_path / "out"),
             "checkpoint": str(tmp_path / "ckpt"),
             "trigger": None,  # availableNow
-            "name": "app_ttl_sink_test",
+            **sink,
         },
     }
-    q = run(spark, cfg)
+
+
+def test_streaming_ttl_dims_via_config(spark, app_dirs, tmp_path):
+    """Dims with cache_ttl_ms (the flink.conf translation's output)
+    route streaming runs through the RefreshingDim foreachBatch path —
+    output matches the plain stream-static wiring on a static dim."""
+    q = run(spark, _ttl_cfg(app_dirs, tmp_path, name="app_ttl_sink_test"))
     q.awaitTermination(300)
     back = spark.read.parquet(str(tmp_path / "out"))
     assert back.count() > 0
@@ -225,6 +233,19 @@ def test_streaming_ttl_dims_via_config(spark, app_dirs, tmp_path):
     # batch reference through the plain path
     ref = run(spark, _cfg(app_dirs, "batch"))
     assert back.count() == ref.count()
+
+
+def test_streaming_ttl_available_now_trigger_drains(spark, app_dirs, tmp_path):
+    """The string "availableNow" is the same trigger as None on the TTL
+    path: the query drains the source and terminates on its own."""
+    cfg = _ttl_cfg(
+        app_dirs, tmp_path, name="app_ttl_available_now", trigger="availableNow"
+    )
+    q = run(spark, cfg)
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+    ref = run(spark, _cfg(app_dirs, "batch"))
+    assert spark.read.parquet(str(tmp_path / "out")).count() == ref.count()
 
 
 def test_conf_without_broker_omits_kafka_and_routes_to_file(spark, app_dirs):
@@ -255,30 +276,12 @@ def test_streaming_ttl_dims_apply_rolling_policy(spark, app_dirs, tmp_path):
     import glob
     import os
 
-    cfg = {
-        "mode": "streaming",
-        "source": {"format": "parquet", "path": str(app_dirs / "src")},
-        "dims": {
-            "imsi_msisdn": {
-                "format": "jdbc",
-                "parquet_fallback": str(app_dirs / "imsi_msisdn"),
-                "cache_ttl_ms": 60_000,
-            },
-            "ms_ip": {
-                "format": "jdbc",
-                "parquet_fallback": str(app_dirs / "ms_ip"),
-            },
-        },
-        "dedup": {"gap": "36500 days"},
-        "sink": {
-            "format": "parquet",
-            "path": str(tmp_path / "out"),
-            "checkpoint": str(tmp_path / "ckpt"),
-            "trigger": None,  # availableNow
-            "name": "app_ttl_rolled_sink_test",
-            "sink.rolling-policy.file-size": 64 * 1024,
-        },
-    }
+    cfg = _ttl_cfg(
+        app_dirs,
+        tmp_path,
+        name="app_ttl_rolled_sink_test",
+        **{"sink.rolling-policy.file-size": 64 * 1024},
+    )
     q = run(spark, cfg)
     q.awaitTermination(300)
     files = glob.glob(str(tmp_path / "out" / "**" / "*.parquet"), recursive=True)

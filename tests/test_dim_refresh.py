@@ -3,8 +3,8 @@
 Scenario mirroring the reference's expire-after-write cache: the dim
 changes between micro-batches; with an expired TTL the next batch sees
 the new rows, with an unexpired TTL it keeps the cached snapshot.
-Driven batch-by-batch through the foreachBatch function directly (the
-streaming engine calls it exactly this way, sequentially per batch).
+Each micro-batch joins against ``RefreshingDim.get()``, the call
+`pipeline.refreshing_enrichment_batch_fn` makes once per batch.
 """
 
 from __future__ import annotations
@@ -40,10 +40,10 @@ def test_ttl_zero_sees_dim_updates(spark, tmp_path):
         _mk_dim_loader(spark, dim_path), ttl_seconds=10.0, clock=lambda: clock["t"]
     )
     outputs: dict[int, list] = {}
-    process = dim.foreach_batch(
-        join_fn=lambda batch, d: batch.join(d, "imsi", "left"),
-        write_fn=lambda df, bid: outputs.__setitem__(bid, sorted(map(tuple, df.collect()))),
-    )
+
+    def process(batch_df, batch_id):
+        joined = batch_df.join(dim.get(), "imsi", "left")
+        outputs[batch_id] = sorted(map(tuple, joined.collect()))
 
     batch0 = spark.createDataFrame([(1,), (3,)], "imsi bigint")
     process(batch0, 0)
@@ -74,10 +74,10 @@ def test_streaming_end_to_end_with_refreshing_dim(spark, tmp_path):
 
     dim = RefreshingDim(_mk_dim_loader(spark, dim_path), ttl_seconds=3600.0)
     rows: list = []
-    process = dim.foreach_batch(
-        join_fn=lambda batch, d: batch.join(F.broadcast(d), "imsi", "left"),
-        write_fn=lambda df, bid: rows.extend(map(tuple, df.collect())),
-    )
+
+    def process(batch_df, batch_id):
+        joined = batch_df.join(F.broadcast(dim.get()), "imsi", "left")
+        rows.extend(map(tuple, joined.collect()))
     q = (
         spark.readStream.schema("imsi bigint")
         .parquet(src)

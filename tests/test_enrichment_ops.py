@@ -46,8 +46,6 @@ def test_extend_partition_cols(spark):
     row = extend_with_partition_cols(df).collect()[0]
     assert row.event_date == dt.date(2024, 3, 5)
     assert row.probe == "DE"
-    row_s = extend_with_partition_cols(df, date_as_string=True).collect()[0]
-    assert row_s.event_date == "2024-03-05"
 
 
 def test_lookup_join_left_null_passthrough(spark):

@@ -53,3 +53,25 @@ def test_parse_specific_offsets_flink_string_form():
     ) == {0: 42, 1: 300}
     assert _parse_specific_offsets({2: 7}) == {2: 7}
     assert _parse_specific_offsets(None) is None
+
+
+def test_build_source_passes_fail_on_data_loss(monkeypatch):
+    """flink.conf's kafka.failOnDataLoss reaches the Kafka reader as the
+    Spark option of the same name; unset leaves Spark's default."""
+    from flink_application_spark import app
+
+    calls = []
+    monkeypatch.setattr(
+        app, "kafka_csv_stream", lambda *a, **kw: calls.append((a, kw))
+    )
+    kafka = {"bootstrap": "broker:9092", "topic": "cdr", "failOnDataLoss": False}
+    app.build_source(None, {"mode": "streaming", "source": {"kafka": kafka}})
+    (args, kw), = calls
+    assert args == (None, "broker:9092", "cdr")
+    assert kw["failOnDataLoss"] == "false"
+    assert kw["startup_mode"] == "latest-offset"
+
+    calls.clear()
+    del kafka["failOnDataLoss"]
+    app.build_source(None, {"mode": "streaming", "source": {"kafka": kafka}})
+    assert "failOnDataLoss" not in calls[0][1]

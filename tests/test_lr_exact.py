@@ -30,7 +30,7 @@ def _round_half_away(x: np.ndarray) -> np.ndarray:
     return np.sign(x) * np.floor(np.abs(x) + 0.5)
 
 
-def _reference_fit(x_real: np.ndarray, y: np.ndarray, iters: int):
+def _reference_fit(x_real: np.ndarray, y: np.ndarray, iters: int, n: int | None = None):
     """Independent replay of the recipe in numpy: ppm quantize, exact
     integer logits/residual/gradient (int64 — magnitudes are ~1e15,
     well inside), one float64 division + half-away round per update.
@@ -39,7 +39,7 @@ def _reference_fit(x_real: np.ndarray, y: np.ndarray, iters: int):
     round(R/1e6) for |R| ≤ 2^53."""
     x = np.round(x_real * 1e6)  # fixture coords have no .5μ knife edges
     x = np.hstack([x, np.full((len(x), 1), 1e6)])
-    n = len(y)
+    n = len(y) if n is None else n
     w = np.zeros((_C, _D + 1))
     prof = []
     for t in range(1, iters + 1):
@@ -72,6 +72,36 @@ def test_matches_exact_python_reference(spark):
     rw, rprof = _reference_fit(x, y, _ITERS)
     w, prof = lr_fit_exact(emb, k_classes=_C, iters=_ITERS)
     assert prof == rprof
+    assert np.array_equal(np.asarray(w, dtype=np.float64), rw)
+
+
+def test_ragged_rows_add_nothing_but_count(spark):
+    """A row whose embedding is shorter than the corpus dim scores NULL
+    for every class: it must not crash the Arrow gradient pass, and —
+    like a NULL-skipping sum — it adds no gradient and no loss, while
+    still counting in n. Its all-NULL scores sort to class 0, so it
+    counts as correct exactly when its label is 0."""
+    emb = _emb(spark)
+    short = spark.createDataFrame(
+        [(10**9 + i, [(i + 1) / 7] * 16, i % _C) for i in range(5)],
+        "vec_id bigint, embedding array<float>, label int",
+    )
+    rows = (
+        emb.filter("embedding IS NOT NULL AND label IS NOT NULL")
+        .select("vec_id", "embedding", "label")
+        .orderBy("vec_id")
+        .collect()
+    )
+    x = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    y = np.asarray([r["label"] for r in rows], dtype=np.int64)
+    rw, rprof = _reference_fit(x, y, 3, n=len(y) + 5)
+    w, prof = lr_fit_exact(
+        emb.select("vec_id", "embedding", "label").unionByName(short).repartition(4),
+        k_classes=_C,
+        iters=3,
+    )
+    short_label0 = sum(1 for i in range(5) if i % _C == 0)
+    assert prof == [(t, l, c + short_label0, a) for t, l, c, a in rprof]
     assert np.array_equal(np.asarray(w, dtype=np.float64), rw)
 
 

@@ -25,7 +25,7 @@ from flink_application_spark.sources.streams import file_stream
 from flink_application_spark.streaming.dedup import session_argmax_dedup
 from flink_application_spark.streaming.pipeline import streaming_enrichment
 from flink_application_spark.streaming.sinks import (
-    fanout_union,
+    trigger_kwargs,
     write_memory,
     write_partitioned_parquet,
 )
@@ -181,10 +181,14 @@ def test_stream_equals_batch_enrichment(spark, cdr_parquet):
     assert got.filter(F.col("msisdn") >= 79002000000).count() > 0
 
 
-def test_batch_session_dedup_vs_windowrank(spark, cdr_parquet):
+def test_batch_session_dedup_vs_windowrank(spark, sf_dir, cdr_parquet):
     """With one session per key (gap ≥ data span), the session arg-max
-    equals the reference's global per-key arg-max (window-rank form) —
-    ties the streaming dedup semantics back to the batch oracle."""
+    equals the reference's global per-key arg-max — the window-rank
+    form the registry's batch query `cdr_enrichment_full` runs on the
+    same fixture. Ties the streaming dedup semantics back to the batch
+    oracle."""
+    from flink_application_spark.plans.registry import REGISTRY_GET
+
     imsi_msisdn = spark.read.parquet(str(cdr_parquet / "imsi_msisdn"))
     ms_ip = spark.read.parquet(str(cdr_parquet / "ms_ip"))
     src = spark.read.parquet(str(cdr_parquet / "src")).filter(
@@ -193,64 +197,30 @@ def test_batch_session_dedup_vs_windowrank(spark, cdr_parquet):
     via_session = streaming_enrichment(
         src, imsi_msisdn, ms_ip, gap="36500 days", watermark_delay="0 seconds"
     )
-    via_rank = _batch_reference(spark, src, imsi_msisdn, ms_ip)
-    g = sorted(tuple(r) for r in via_session.select(*CANONICAL).collect())
-    e = sorted(tuple(r) for r in via_rank.select(*CANONICAL).collect())
-    assert g == e
+    via_rank = REGISTRY_GET("cdr_enrichment_full").spark(spark, sf_dir)
 
+    # the fixture casts start_time to TIMESTAMP, the registry keeps the
+    # source's type: compare rendered values (UTC session time zone)
+    def rows(df):
+        cols = [F.col(c).cast("string") for c in CANONICAL]
+        return sorted(tuple(r) for r in df.select(*cols).collect())
 
-def _batch_reference(spark, src, imsi_msisdn, ms_ip):
-    """Batch form of the same pipeline via the shared operator library
-    (plans/cdr.py path A + path B with window-rank dedup)."""
-    from flink_application_spark.operators.dedup import argmax_dedup
-    from flink_application_spark.operators.enrichment import (
-        coalesce_enrich,
-        explode_delimited,
-        extend_with_partition_cols,
-        lookup_join,
-        select_canonical,
-        theta_asof_candidates,
-    )
-    from flink_application_spark.plans.cdr import _ASOF_ORDER_SPARK
-
-    extended = extend_with_partition_cols(src)
-    a = lookup_join(
-        extended.filter(F.col("imsi").isNotNull()),
-        imsi_msisdn,
-        on=F.col("imsi") == F.col("_imsi"),
-        project={"_imsi": "imsi", "_msisdn": "msisdn"},
-        how="inner",
-    )
-    a = select_canonical(
-        coalesce_enrich(a, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
-    exploded = explode_delimited(
-        extended.filter(F.col("imsi").isNull()), "ms_ip_address", out_col="ip"
-    )
-    dim = explode_delimited(ms_ip, "ms_ip_address", out_col="ip").select(
-        F.col("start_time").alias("_start_time"),
-        F.col("imsi").alias("_imsi"),
-        F.col("msisdn").alias("_msisdn"),
-        F.col("probe").alias("_probe"),
-        F.col("ip").alias("_ip"),
-    )
-    candidates = theta_asof_candidates(
-        exploded,
-        dim,
-        equi_keys=[("probe", "_probe"), ("ip", "_ip")],
-        left_ts="start_time",
-        right_ts="_start_time",
-    )
-    best = argmax_dedup(candidates, ["unique_cdr_id"], _ASOF_ORDER_SPARK)
-    b = select_canonical(
-        coalesce_enrich(best, {"imsi": "_imsi", "msisdn": "_msisdn"}), CANONICAL
-    )
-    return a.unionByName(b)
+    g = rows(via_session)
+    assert len(g) > 0
+    assert g == rows(via_rank)
 
 
 # ---------------------------------------------------------------------------
-# Partitioned parquet sink (S4) + union fan-in (S6/R4)
+# Partitioned parquet sink (S4)
 # ---------------------------------------------------------------------------
+
+
+def test_trigger_kwargs_one_rule():
+    """None, "" and "availableNow" all drain and stop; anything else is
+    a processing-time interval."""
+    for drain in (None, "", "availableNow"):
+        assert trigger_kwargs(drain) == {"availableNow": True}
+    assert trigger_kwargs("3 seconds") == {"processingTime": "3 seconds"}
 
 
 def test_partitioned_parquet_sink(spark, cdr_parquet, tmp_path):
@@ -276,12 +246,6 @@ def test_partitioned_parquet_sink(spark, cdr_parquet, tmp_path):
     back = spark.read.parquet(out)
     n_src = spark.read.parquet(str(cdr_parquet / "src")).count()
     assert back.count() == n_src
-
-
-def test_fanout_union_single_committer(spark, cdr_parquet):
-    a = spark.read.parquet(str(cdr_parquet / "src")).limit(5)
-    b = spark.read.parquet(str(cdr_parquet / "src")).limit(3)
-    assert fanout_union([a, b]).count() == 8
 
 
 # ---------------------------------------------------------------------------
