@@ -179,14 +179,11 @@ def stream_throughput(
         # small data. Untimed maintenance (runs after sink_wall is
         # taken); row count must be invariant.
         from flink_application_spark.streaming.sinks import (
-            committed_batch_dirs,
+            committed_batches,
             compact_batches,
         )
 
-        max_bid = max(
-            int(os.path.basename(p).split("=", 1)[1])
-            for p in committed_batch_dirs(f"{root}/sink")
-        )
+        max_bid = committed_batches(f"{root}/sink")[-1][0]
         compact_batches(
             spark,
             f"{root}/sink",

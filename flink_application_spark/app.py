@@ -177,20 +177,17 @@ def compact_sink(spark: SparkSession, config: str | dict[str, Any]) -> int:
     overwrite — `idempotent_batch_write`'s contract), so only batches
     strictly below it fold. Returns the number absorbed (0 when
     disabled, empty, or nothing old enough)."""
-    import os
-
     cfg = load_config(config)
     sink = cfg.get("sink", {})
     if sink.get("format") != "parquet" or not sink.get("auto-compaction"):
         return 0
-    dirs = sinks.committed_batch_dirs(sink["path"])
-    bids = [int(os.path.basename(p).split("=", 1)[1]) for p in dirs]
-    if not bids:
+    batches = sinks.committed_batches(sink["path"])
+    if not batches:
         return 0
     return sinks.compact_batches(
         spark,
         sink["path"],
-        min_live_batch=max(bids),
+        min_live_batch=batches[-1][0],
         partition_by=tuple(sink.get("partition_by", ("event_date", "probe"))),
     )
 

@@ -133,8 +133,10 @@ def _scored(q: DataFrame, weights: list[list[int]]) -> DataFrame:
 
 # Rows per Arrow gradient chunk: bounds the exact int64 matmul —
 # |rq·v| ≤ ~1e13 at observed residual/coordinate magnitudes, so a
-# 65536-row chunk's cell sum stays ≤ ~6.6e17 ≪ 2⁶³; chunk partials
-# then combine in DECIMAL(38,0) Spark-side (exact, associative).
+# 65536-row chunk's cell sum stays ≤ ~6.6e17 ≪ 2⁶³. Each chunk checks
+# that bound on its own magnitudes and falls back to Python ints when
+# it fails; partials then combine in DECIMAL(38,0) Spark-side (exact,
+# associative).
 _GRAD_CHUNK = 65_536
 
 
@@ -145,7 +147,7 @@ _METRICS_CLASS = -1
 
 def _round_cells(scored: DataFrame) -> DataFrame:
     """ONE Arrow pass per GD round (guide §4.2 + §2.6 job-count
-    discipline): exact int64 gradient partials (class, pos0,
+    discipline): exact integer gradient partials (class, pos0,
     g = Σ rq·v — a single RᵀE matmul per chunk instead of the
     n·C·(d+1)-row double-posexplode the first form shuffled into the
     650-cell aggregate) PLUS the round metrics as two tagged partial
@@ -158,10 +160,15 @@ def _round_cells(scored: DataFrame) -> DataFrame:
     (metrics agg + gradient agg), each ~0.3 s of fixed sub-second-job
     overhead at the gate SF. Bit-identical trajectory pinned by
     tests/test_lr_exact.py and the unrolled DuckDB oracle."""
+    from decimal import Decimal
+
     import numpy as np
     import pandas as pd
 
     chunk = _GRAD_CHUNK
+
+    def absmax(a) -> int:
+        return max(-int(a.min()), int(a.max()))
 
     def part(batches):
         lsum = 0
@@ -196,7 +203,10 @@ def _round_cells(scored: DataFrame) -> DataFrame:
                         continue
                     R = np.array([rlist[i] for i in idxs], dtype=np.int64)
                     E = np.array([elist[i] for i in idxs], dtype=np.int64)
-                    G = R.T @ E  # C×d exact int64 (chunk bound above)
+                    if absmax(R) * absmax(E) * len(idxs) < 2**63:
+                        G = R.T @ E  # C×d exact int64
+                    else:  # int64 would wrap silently: exact Python ints
+                        G = R.astype(object).T @ E.astype(object)
                     C = G.shape[0]
                     yield pd.DataFrame(
                         {
@@ -204,7 +214,7 @@ def _round_cells(scored: DataFrame) -> DataFrame:
                                 np.arange(C, dtype=np.int32), d
                             ),
                             "pos0": np.tile(np.arange(d, dtype=np.int32), C),
-                            "g": G.ravel(),
+                            "g": [Decimal(int(v)) for v in G.ravel()],
                         }
                     )
         if nonempty:
@@ -212,7 +222,7 @@ def _round_cells(scored: DataFrame) -> DataFrame:
                 {
                     "class": np.array([_METRICS_CLASS] * 2, dtype=np.int32),
                     "pos0": np.array([0, 1], dtype=np.int32),
-                    "g": np.array([lsum, csum], dtype=np.int64),
+                    "g": [Decimal(lsum), Decimal(csum)],
                 }
             )
 
@@ -228,7 +238,7 @@ def _round_cells(scored: DataFrame) -> DataFrame:
         # old sum(IF(pred = label, 1, 0))
         F.expr("IF(pred = label, 1, 0)").alias("ok"),
     )
-    return inputs.mapInPandas(part, "class int, pos0 int, g long")
+    return inputs.mapInPandas(part, "class int, pos0 int, g decimal(38,0)")
 
 
 def lr_fit_exact(
@@ -269,7 +279,7 @@ def lr_fit_exact(
         rows = (
             _round_cells(scored)
             .groupBy("class", "pos0")
-            .agg(F.expr("sum(CAST(g AS DECIMAL(38,0)))").alias("g"))
+            .agg(F.sum("g").alias("g"))
             .join(F.broadcast(wdf), ["class", "pos0"], "left")
             .select(
                 "class",

@@ -19,18 +19,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.functions.vectors import cosine
 from flink_application_spark.operators.ann_index import load_centroids
 from flink_application_spark.operators.similarity import _assign_udf, _topk_per_query
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 
-class IVFIngest:
+class IVFIngest(BatchStore):
     """Appends streamed vectors to a persisted IVF index whose
     centroids were built by `operators/ann_index.build_ivf_index`
     (the ``centroids/`` + ``meta/`` dirs must exist; ``lists/`` is
@@ -59,7 +59,7 @@ class IVFIngest:
         )
 
     def lists(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._lists)
+        return read_committed(spark, self._lists)
 
     def query(
         self,
@@ -89,18 +89,3 @@ class IVFIngest:
             .distinct()
         )
         return _topk_per_query(scored, k)
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "ivf_ingest",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )

@@ -18,7 +18,8 @@ grows (test-pinned tolerance).
 Crash safety as everywhere in this package: partials commit through
 `sinks.idempotent_batch_write` per-batch overwrite — replays rewrite,
 never double-add (the failure an additive statistic cannot survive).
-Flagged rows commit the same way.
+Flagged rows commit the same way, and every read (history included)
+goes through `sinks.read_committed`, so a crash partial stays unseen.
 """
 
 from __future__ import annotations
@@ -26,15 +27,27 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
+_MOMENTS_SCHEMA = "key string, n bigint, s1 double, s2 double"
 
-class StreamingAnomalyDetector:
+
+def _moments(raw: DataFrame) -> DataFrame:
+    """(key, n, mean, std) from summed (n, Σx, Σx²) partials."""
+    merged = raw.groupBy("key").agg(
+        F.sum("n").alias("n"), F.sum("s1").alias("s1"), F.sum("s2").alias("s2")
+    )
+    mean = F.col("s1") / F.col("n")
+    var = F.greatest(F.col("s2") / F.col("n") - mean * mean, F.lit(0.0))
+    return merged.select("key", "n", mean.alias("mean"), F.sqrt(var).alias("std"))
+
+
+class StreamingAnomalyDetector(BatchStore):
     def __init__(
         self,
         state_dir: str,
@@ -51,33 +64,15 @@ class StreamingAnomalyDetector:
         self._moments_dir = os.path.join(state_dir, "moments")
         self._flags_dir = os.path.join(state_dir, "flags")
 
-    def _has(self, path: str) -> bool:
-        import glob
-
-        return bool(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-
     def history(self, spark) -> DataFrame:
         """Merged per-key moments over all committed batches:
         (key, n, mean, std)."""
-        if not self._has(self._moments_dir):
-            return spark.createDataFrame(
-                [], "key string, n bigint, mean double, std double"
-            )
-        merged = (
-            spark.read.parquet(self._moments_dir)
-            .groupBy("key")
-            .agg(F.sum("n").alias("n"), F.sum("s1").alias("s1"), F.sum("s2").alias("s2"))
-        )
-        mean = F.col("s1") / F.col("n")
-        var = F.greatest(F.col("s2") / F.col("n") - mean * mean, F.lit(0.0))
-        return merged.select("key", "n", mean.alias("mean"), F.sqrt(var).alias("std"))
+        return _moments(read_committed(spark, self._moments_dir, _MOMENTS_SCHEMA))
 
     def flags(self, spark) -> DataFrame:
-        if not self._has(self._flags_dir):
-            return spark.createDataFrame(
-                [], "key string, value double, zscore double"
-            )
-        return spark.read.parquet(self._flags_dir).select("key", "value", "zscore")
+        return read_committed(
+            spark, self._flags_dir, "key string, value double, zscore double"
+        ).select("key", "value", "zscore")
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -86,45 +81,27 @@ class StreamingAnomalyDetector:
             F.col(self.value_col).cast("double").alias("value"),
         ).filter(F.col("value").isNotNull())
 
-        # score against PRIOR history (moments of batches < N — the
-        # store cannot yet contain batch N except on replay, where the
-        # overwrite below makes the replayed flags identical anyway
-        # only if we exclude this batch's own partial; read via the
-        # _batch partition column to be exact)
-        hist_raw = None
-        if self._has(self._moments_dir):
-            hist_raw = spark.read.parquet(self._moments_dir).filter(
-                F.col("_batch") != batch_id
+        # score against PRIOR history: moments of committed batches
+        # < N, so a replay of N scores exactly as its first attempt did
+        hist = _moments(
+            read_committed(spark, self._moments_dir, _MOMENTS_SCHEMA, before=batch_id)
+        )
+        flagged = (
+            ev.join(F.broadcast(hist), "key")
+            .filter(
+                (F.col("n") >= self.min_history)
+                & (F.col("std") > 0)
+                & (F.abs(F.col("value") - F.col("mean")) / F.col("std")
+                   >= self.threshold)
             )
-        if hist_raw is not None:
-            merged = hist_raw.groupBy("key").agg(
-                F.sum("n").alias("n"), F.sum("s1").alias("s1"), F.sum("s2").alias("s2")
+            .select(
+                "key",
+                "value",
+                F.round(
+                    F.abs(F.col("value") - F.col("mean")) / F.col("std"), 4
+                ).alias("zscore"),
             )
-            mean = F.col("s1") / F.col("n")
-            var = F.greatest(F.col("s2") / F.col("n") - mean * mean, F.lit(0.0))
-            hist = merged.select(
-                "key", "n", mean.alias("mean"), F.sqrt(var).alias("std")
-            )
-            flagged = (
-                ev.join(F.broadcast(hist), "key")
-                .filter(
-                    (F.col("n") >= self.min_history)
-                    & (F.col("std") > 0)
-                    & (F.abs(F.col("value") - F.col("mean")) / F.col("std")
-                       >= self.threshold)
-                )
-                .select(
-                    "key",
-                    "value",
-                    F.round(
-                        F.abs(F.col("value") - F.col("mean")) / F.col("std"), 4
-                    ).alias("zscore"),
-                )
-            )
-        else:
-            flagged = ev.limit(0).select(
-                "key", "value", F.lit(0.0).alias("zscore")
-            )
+        )
 
         partial = ev.groupBy("key").agg(
             F.count(F.lit(1)).alias("n"),
@@ -133,18 +110,3 @@ class StreamingAnomalyDetector:
         )
         idempotent_batch_write(flagged, self._flags_dir, batch_id)
         idempotent_batch_write(partial, self._moments_dir, batch_id)
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "anomaly_detector",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )

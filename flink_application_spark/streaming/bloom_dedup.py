@@ -43,12 +43,16 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from flink_application_spark.plans.bloom_queries import _K, _M, bloom_positions
-from flink_application_spark.streaming.sinks import idempotent_batch_write
+from flink_application_spark.streaming.sinks import (
+    BatchStore,
+    idempotent_batch_write,
+    read_committed,
+)
 
 _PCELLS = 256
 
 
-class BloomDedupStream:
+class BloomDedupStream(BatchStore):
     def __init__(
         self,
         store_dir: str,
@@ -68,23 +72,11 @@ class BloomDedupStream:
 
     # -- store access -------------------------------------------------
 
-    def _committed(self, root: str) -> list[str]:
-        """_SUCCESS-gated batch listing — the shared crash-window
-        discipline lives in sinks.committed_batch_dirs."""
-        from flink_application_spark.streaming.sinks import committed_batch_dirs
-
-        return committed_batch_dirs(root)
-
     def flags(self, spark) -> DataFrame:
         """All per-doc verdicts so far: (doc_id, bloom_dup 0/1)."""
-        done = self._committed(self._flags_dir)
-        if not done:
-            return spark.createDataFrame([], f"{self.id_col} bigint, bloom_dup bigint")
-        return (
-            spark.read.option("basePath", self._flags_dir)
-            .parquet(*done)
-            .select(self.id_col, "bloom_dup")
-        )
+        return read_committed(
+            spark, self._flags_dir, f"{self.id_col} bigint, bloom_dup bigint"
+        ).select(self.id_col, "bloom_dup")
 
     # -- per-batch maintenance ----------------------------------------
 
@@ -102,23 +94,14 @@ class BloomDedupStream:
 
         # covered-by-earlier-batch: semi-join against the bit store,
         # restricted to batches strictly before this one (replay safety)
-        committed_bits = self._committed(self._bits_dir)
-        if committed_bits:
-            old = (
-                spark.read.option("basePath", self._bits_dir)
-                .parquet(*committed_bits)
-                .filter(F.col("_batch") < batch_id)
-                .select("pcell", "pos")
-            )
-            hit_old = (
-                pos.join(old, ["pcell", "pos"], "left_semi")
-                .select(idc, "pos")
-                .withColumn("old_hit", F.lit(1))
-            )
-        else:
-            hit_old = spark.createDataFrame(
-                [], f"{idc} bigint, pos bigint, old_hit int"
-            )
+        old = read_committed(
+            spark, self._bits_dir, pos.select("pcell", "pos").schema, before=batch_id
+        ).select("pcell", "pos")
+        hit_old = (
+            pos.join(old, ["pcell", "pos"], "left_semi")
+            .select(idc, "pos")
+            .withColumn("old_hit", F.lit(1))
+        )
 
         # covered-within-batch: the batch audit's first-writer-wins rule
         first_in_batch = pos.groupBy("pos").agg(F.min(idc).alias("first_id"))
@@ -148,13 +131,3 @@ class BloomDedupStream:
             partition_by=("pcell",),
         )
         pos.unpersist()
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        """Wire the maintenance into a streaming query (availableNow
-        file streams in tests; any micro-batch source in production)."""
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

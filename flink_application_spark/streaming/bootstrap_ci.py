@@ -32,27 +32,21 @@ from flink_application_spark.plans.bootstrap_queries import (
     scored_docs,
 )
 from flink_application_spark.streaming.sinks import (
-    committed_batch_dirs,
+    BatchStore,
     idempotent_batch_write,
+    read_committed,
 )
 
 
-class BootstrapCIStream:
+class BootstrapCIStream(BatchStore):
     def __init__(self, store_dir: str) -> None:
         self.store_dir = store_dir
         self._partials_dir = os.path.join(store_dir, "partials")
 
     def partials(self, spark) -> DataFrame:
-        done = committed_batch_dirs(self._partials_dir)
-        if not done:
-            return spark.createDataFrame(
-                [], "source string, b int, swq bigint, sw bigint"
-            )
-        return (
-            spark.read.option("basePath", self._partials_dir)
-            .parquet(*done)
-            .select("source", "b", "swq", "sw")
-        )
+        return read_committed(
+            spark, self._partials_dir, "source string, b int, swq bigint, sw bigint"
+        ).select("source", "b", "swq", "sw")
 
     def report(self, spark) -> DataFrame:
         """Per-source observed mean + 95% CI over everything ingested
@@ -64,12 +58,4 @@ class BootstrapCIStream:
             bootstrap_partials(scored_docs(batch_df)),
             self._partials_dir,
             batch_id,
-        )
-
-    def attach(self, doc_stream: DataFrame, checkpoint: str):
-        return (
-            doc_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )

@@ -14,9 +14,8 @@ order, or crash replay.
 Per micro-batch (`foreachBatch`):
 
 1. load the latest committed mapping SNAPSHOT written strictly before
-   this batch (`_SUCCESS`-gated, `_batch < current` — a replayed batch
-   can't read its own half-written state; the shared store discipline
-   of BloomDedupStream/SegmentScrubStream);
+   this batch (`sinks.committed_batches(root, before=batch)` — a
+   replayed batch can't read its own half-written state);
 2. recompute ONLY the affected subgraph: components touched by this
    batch's edges are expanded to their full membership, re-solved
    together with the new edges as a star-graph union (each old
@@ -32,28 +31,29 @@ Per micro-batch (`foreachBatch`):
 Correctness of the delta step: `affected` holds EVERY member of every
 component any new edge touches, so the min-id over (affected ∪ new
 nodes) is the true component minimum; components no edge touches
-cannot change. Snapshot IO is O(nodes seen) per batch — compact old
-generations with `sinks.compact_batches`; at 100 TB the mapping is one
+cannot change. Snapshot IO is O(nodes seen) per batch — drop superseded
+generations with `sinks.vacuum_snapshots` (folding snapshots with
+`compact_batches` would double-count); at 100 TB the mapping is one
 (long, long) row per distinct document, partitionable by id range.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, functions as F
 
 from flink_application_spark.operators.components import connected_components
 from flink_application_spark.streaming.sinks import (
-    committed_batch_dirs,
+    BatchStore,
+    committed_batches,
     idempotent_batch_write,
 )
 
 _MAPPING_SCHEMA = "node bigint, component bigint"
 
 
-class StreamingComponents:
+class StreamingComponents(BatchStore):
     def __init__(
         self, store_dir: str, *, src_col: str = "id_a", dst_col: str = "id_b"
     ) -> None:
@@ -64,28 +64,13 @@ class StreamingComponents:
 
     # -- store access -------------------------------------------------
 
-    def _latest_dir(self, before: int | None = None) -> str | None:
-        best_id, best = -1, None
-        for d in committed_batch_dirs(self._map_dir):
-            m = re.search(r"_batch=(\d+)$", d)
-            if not m:
-                continue
-            bid = int(m.group(1))
-            if (before is None or bid < before) and bid > best_id:
-                best_id, best = bid, d
-        return best
-
     def mapping(self, spark, before: int | None = None) -> DataFrame:
         """The latest committed (node, component) snapshot — the live
         answer to "which cluster is this document in"."""
-        d = self._latest_dir(before)
-        if d is None:
+        snaps = committed_batches(self._map_dir, before)
+        if not snaps:
             return spark.createDataFrame([], _MAPPING_SCHEMA)
-        return (
-            spark.read.option("basePath", self._map_dir)
-            .parquet(d)
-            .select("node", "component")
-        )
+        return spark.read.parquet(snaps[-1][1]).select("node", "component")
 
     # -- per-batch maintenance ----------------------------------------
 
@@ -132,13 +117,3 @@ class StreamingComponents:
         )
         idempotent_batch_write(new_map, self._map_dir, batch_id)
         old.unpersist()
-
-    def attach(self, pair_stream: DataFrame, checkpoint: str):
-        """Wire the maintenance into a streaming query over a pair
-        stream (e.g. the near-dup index's emitted pairs)."""
-        return (
-            pair_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

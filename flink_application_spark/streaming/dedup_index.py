@@ -37,7 +37,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.operators.minhash import (
     DEFAULT_BANDS,
@@ -47,10 +46,16 @@ from flink_application_spark.operators.minhash import (
     jaccard_column,
     with_shingles,
 )
-from flink_application_spark.streaming.sinks import idempotent_batch_write
+from flink_application_spark.streaming.sinks import (
+    BatchStore,
+    idempotent_batch_write,
+    read_committed,
+)
+
+_PAIRS_SCHEMA = "id_a bigint, id_b bigint, jaccard double"
 
 
-class NearDupIndex:
+class NearDupIndex(BatchStore):
     def __init__(
         self,
         index_dir: str,
@@ -73,29 +78,21 @@ class NearDupIndex:
 
     # -- store access -------------------------------------------------
 
-    def _has(self, path: str) -> bool:
-        import glob
-
-        return bool(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-
     def pairs(self, spark) -> DataFrame:
         """All near-dup pairs discovered so far (id_a < id_b, jaccard)."""
-        if not self._has(self._pairs_dir):
-            return spark.createDataFrame(
-                [], "id_a bigint, id_b bigint, jaccard double"
-            )
-        return spark.read.parquet(self._pairs_dir).select("id_a", "id_b", "jaccard")
+        return read_committed(spark, self._pairs_dir, _PAIRS_SCHEMA).select(
+            "id_a", "id_b", "jaccard"
+        )
 
     def batch_pairs(self, spark, batch_id: int) -> DataFrame:
-        """The pairs one batch emitted (empty DataFrame if none) — the
-        public accessor consumers use instead of touching the store
-        layout (CorpusIngestion's drop decisions read this)."""
-        sub = os.path.join(self._pairs_dir, f"_batch={batch_id}")
-        if not self._has(sub):
-            return spark.createDataFrame(
-                [], "id_a bigint, id_b bigint, jaccard double"
-            )
-        return spark.read.parquet(sub).select("id_a", "id_b", "jaccard")
+        """The pairs one committed batch emitted (empty DataFrame if
+        none) — the public accessor consumers use instead of touching
+        the store layout (CorpusIngestion's drop decisions read this)."""
+        return (
+            read_committed(spark, self._pairs_dir, _PAIRS_SCHEMA, before=batch_id + 1)
+            .filter(F.col("_batch") == batch_id)
+            .select("id_a", "id_b", "jaccard")
+        )
 
     # -- per-batch maintenance ----------------------------------------
 
@@ -130,34 +127,33 @@ class NearDupIndex:
         nn = bucket_self_pairs(bands_new.select("id", "band_key"))
 
         # new-vs-old: the batch's band keys probe the store's buckets
-        cands = nn
-        if self._has(self._bands_dir):
-            old = spark.read.parquet(self._bands_dir).select(
-                F.col("id").alias("id_old"),
-                F.col("band_key").alias("bk_old"),
-                F.col("bk2").alias("bk2_old"),
+        old = read_committed(
+            spark, self._bands_dir, bands_new.select("id", "band_key", "bk2").schema
+        ).select(
+            F.col("id").alias("id_old"),
+            F.col("band_key").alias("bk_old"),
+            F.col("bk2").alias("bk2_old"),
+        )
+        no = (
+            bands_new.join(
+                old,
+                # bk2 equality is implied by band_key equality but
+                # stated explicitly: it targets the store's hive
+                # partition column, enabling dynamic partition
+                # pruning of store partitions no batch doc probes
+                (F.col("bk2") == F.col("bk2_old"))
+                & (F.col("band_key") == F.col("bk_old")),
             )
-            no = (
-                bands_new.join(
-                    old,
-                    # bk2 equality is implied by band_key equality but
-                    # stated explicitly: it targets the store's hive
-                    # partition column, enabling dynamic partition
-                    # pruning of store partitions no batch doc probes
-                    (F.col("bk2") == F.col("bk2_old"))
-                    & (F.col("band_key") == F.col("bk_old")),
-                )
-                # on checkpoint replay the store already holds THIS
-                # batch's fingerprints (idempotent overwrite pending),
-                # so a doc can meet itself — drop self-pairs
-                .filter(F.col("id") != F.col("id_old"))
-                .select(
-                    F.least(F.col("id"), F.col("id_old")).alias("id_a"),
-                    F.greatest(F.col("id"), F.col("id_old")).alias("id_b"),
-                )
+            # on checkpoint replay the store already holds THIS
+            # batch's fingerprints (idempotent overwrite pending),
+            # so a doc can meet itself — drop self-pairs
+            .filter(F.col("id") != F.col("id_old"))
+            .select(
+                F.least(F.col("id"), F.col("id_old")).alias("id_a"),
+                F.greatest(F.col("id"), F.col("id_old")).alias("id_b"),
             )
-            cands = cands.unionByName(no)
-        cands = cands.distinct()
+        )
+        cands = nn.unionByName(no).distinct()
 
         # exact verify: shingles come from the batch or the store. The
         # dropDuplicates is replay-critical: after a crash between the
@@ -165,11 +161,11 @@ class NearDupIndex:
         # holds THIS batch's (id, shingles) rows, and a duplicated id
         # would fan the verify join out (4 rows per pair, breaking the
         # exactly-once pair log).
-        all_sh = sh_new
-        if self._has(self._shingles_dir):
-            all_sh = sh_new.unionByName(
-                spark.read.parquet(self._shingles_dir).select("id", "shingles")
-            ).dropDuplicates(["id"])
+        all_sh = sh_new.unionByName(
+            read_committed(spark, self._shingles_dir, sh_new.schema).select(
+                "id", "shingles"
+            )
+        ).dropDuplicates(["id"])
         verified = (
             cands.join(
                 all_sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
@@ -197,22 +193,3 @@ class NearDupIndex:
         idempotent_batch_write(sh_new, self._shingles_dir, batch_id)
         sh_new.unpersist()
         bands_new.unpersist()
-
-    # -- streaming attachment -----------------------------------------
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "near_dup_index",
-    ) -> StreamingQuery:
-        from flink_application_spark.streaming.sinks import trigger_kwargs
-
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )

@@ -33,12 +33,13 @@ from flink_application_spark.operators.hll import (
     merge_sketches,
 )
 from flink_application_spark.streaming.sinks import (
-    committed_batch_dirs,
+    BatchStore,
     idempotent_batch_write,
+    read_committed,
 )
 
 
-class DetHllStream:
+class DetHllStream(BatchStore):
     def __init__(
         self,
         store_dir: str,
@@ -68,27 +69,12 @@ class DetHllStream:
     def sketch(self, spark) -> DataFrame:
         """The merged (group…, register, rank) table over everything
         ingested — EXACTLY the batch sketch of the union corpus."""
-        done = committed_batch_dirs(self._dir)
-        if not done:
-            return spark.createDataFrame(
-                [], f"{self.group_ddl}, register int, rank int"
-            )
-        raw = (
-            spark.read.option("basePath", self._dir)
-            .parquet(*done)
-            .select(*self.group_cols, "register", "rank")
-        )
+        raw = read_committed(
+            spark, self._dir, f"{self.group_ddl}, register int, rank int"
+        ).select(*self.group_cols, "register", "rank")
         return merge_sketches(raw, self.group_cols)
 
     def estimates(self, spark) -> DataFrame:
         """(group…, est_users, n_registers) — identical to the batch
         estimate on the union corpus, bit for bit."""
         return det_hll_estimate(self.sketch(spark), self.group_cols)
-
-    def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

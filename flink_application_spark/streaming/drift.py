@@ -16,11 +16,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 
@@ -49,7 +49,7 @@ def build_baseline(ref_docs: DataFrame, baseline_dir: str) -> None:
     out.coalesce(1).write.mode("overwrite").parquet(baseline_dir)
 
 
-class DriftMonitor:
+class DriftMonitor(BatchStore):
     def __init__(self, baseline_dir: str, out_dir: str) -> None:
         self.baseline_dir = baseline_dir
         self._audit = os.path.join(out_dir, "psi")
@@ -124,19 +124,4 @@ class DriftMonitor:
             batch_df.unpersist()
 
     def audit(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._audit)
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "drift_monitor",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )
+        return read_committed(spark, self._audit)

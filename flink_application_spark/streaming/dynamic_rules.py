@@ -22,11 +22,11 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 
@@ -47,7 +47,7 @@ def read_rules(rules_path: str) -> dict[str, str]:
         return json.load(f)
 
 
-class DynamicRuleEngine:
+class DynamicRuleEngine(BatchStore):
     """Evaluates the current rule table against each micro-batch."""
 
     def __init__(self, rules_path: str, out_dir: str, id_col: str) -> None:
@@ -112,19 +112,4 @@ class DynamicRuleEngine:
             batch_df.unpersist()
 
     def matches(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._matches)
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "dynamic_rules",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )
+        return read_committed(spark, self._matches)

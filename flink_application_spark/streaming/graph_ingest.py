@@ -38,23 +38,23 @@ size, not the corpus (module doc of operators/graph_insert.py).
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flink_application_spark.operators.graph_insert import graph_insert_batch
 from flink_application_spark.operators.kmeans_exact import quantize_ppm
 from flink_application_spark.streaming.sinks import (
-    committed_batch_dirs,
+    BatchStore,
+    committed_batches,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 _GRAPH_SCHEMA = "src bigint, dst bigint, d2 bigint, rank int"
 _COORD_SCHEMA = "vec_id bigint, e array<bigint>"
 
 
-class GraphIngest:
+class GraphIngest(BatchStore):
     """Grows a seeded kNN graph as vector micro-batches arrive.
 
     ``seed(spark, base_graph, base_coords)`` must run once before any
@@ -111,34 +111,11 @@ class GraphIngest:
 
     # -- store access ---------------------------------------------------
 
-    def _latest_graph_dir(self, before: int | None = None) -> str | None:
-        best_id, best = -1, None
-        for d in committed_batch_dirs(self._graph_dir):
-            m = re.search(r"_batch=(\d+)$", d)
-            if not m:
-                continue
-            bid = int(m.group(1))
-            if (before is None or bid < before) and bid > best_id:
-                best_id, best = bid, d
-        return best
-
     def graph(self, spark: SparkSession, before: int | None = None) -> DataFrame:
-        d = self._latest_graph_dir(before)
-        if d is not None:
-            return (
-                spark.read.option("basePath", self._graph_dir)
-                .parquet(d)
-                .select("src", "dst", "d2", "rank")
-            )
+        snaps = committed_batches(self._graph_dir, before)
+        if snaps:
+            return spark.read.parquet(snaps[-1][1]).select("src", "dst", "d2", "rank")
         return spark.read.parquet(self._base_graph)
-
-    def _batched_dirs(self, root: str, before: int | None) -> list[tuple[int, str]]:
-        out = []
-        for d in committed_batch_dirs(root):
-            bid = int(re.search(r"_batch=(\d+)$", d).group(1))
-            if before is None or bid < before:
-                out.append((bid, d))
-        return out
 
     def _coords(self, spark: SparkSession, before: int | None = None) -> DataFrame:
         # Tombstones are BATCH-AWARE: an id deleted in batch N and
@@ -151,34 +128,25 @@ class GraphIngest:
             .select("vec_id", "e")
             .withColumn("_b", F.lit(-1).cast("long"))
         )
-        ins = self._batched_dirs(self._vec_dir, before)
-        if ins:
-            # ONE read over all committed batch dirs — basePath
-            # surfaces the `_batch` dir key as a column (the
-            # compact_batches discipline), so the batch id rides the
-            # rows instead of one union branch per dir (O(n_batches)
-            # driver-side plan cost on a long-lived stream otherwise)
-            out = out.unionByName(
-                spark.read.option("basePath", self._vec_dir)
-                .parquet(*[d for _, d in ins])
-                .select(
-                    "vec_id", "e", F.col("_batch").cast("long").alias("_b")
-                )
+        # ONE committed read per store: the `_batch` dir key rides the
+        # rows as a column instead of one union branch per dir
+        # (O(n_batches) driver-side plan cost on a long-lived stream)
+        out = out.unionByName(
+            read_committed(spark, self._vec_dir, _COORD_SCHEMA, before=before).select(
+                "vec_id", "e", F.col("_batch").cast("long").alias("_b")
             )
-        dels = self._batched_dirs(self._del_dir, before)
-        if dels:
-            gone = (
-                spark.read.option("basePath", self._del_dir)
-                .parquet(*[d for _, d in dels])
-                .select("vec_id", F.col("_batch").cast("long").alias("_db"))
-                .groupBy("vec_id")
-                .agg(F.max("_db").alias("_db"))
-            )
-            out = (
-                out.join(gone, "vec_id", "left")
-                .filter(F.col("_db").isNull() | (F.col("_b") >= F.col("_db")))
-                .drop("_db")
-            )
+        )
+        gone = (
+            read_committed(spark, self._del_dir, "vec_id bigint", before=before)
+            .select("vec_id", F.col("_batch").cast("long").alias("_db"))
+            .groupBy("vec_id")
+            .agg(F.max("_db").alias("_db"))
+        )
+        out = (
+            out.join(gone, "vec_id", "left")
+            .filter(F.col("_db").isNull() | (F.col("_b") >= F.col("_db")))
+            .drop("_db")
+        )
         # latest insert wins per id (upsert semantics); a no-op for
         # insert-only unique-id streams, keeping the stream==batch pin
         return (
@@ -278,12 +246,4 @@ class GraphIngest:
             ),
             self._del_dir,
             batch_id,
-        )
-
-    def attach(self, vec_stream: DataFrame, checkpoint: str, trigger=None):
-        return (
-            vec_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
         )

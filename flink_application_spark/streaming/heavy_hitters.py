@@ -21,7 +21,8 @@ its exact top-M keys as heavy-hitter candidates:
 Crash safety: both stores commit through
 `sinks.idempotent_batch_write` (per-batch overwrite) — replays
 rewrite, never double-count, which is exactly the property an
-ADDITIVE sketch cannot survive without.
+ADDITIVE sketch cannot survive without. Reads merge only committed
+batches (`sinks.read_committed`).
 
 Deterministic md5 bucketing (shared with the batch oracle family), so
 estimates are reproducible across runs and engines.
@@ -32,11 +33,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 _D = 4    # hash rows
@@ -49,7 +50,7 @@ def _bucket(row: F.Column, key: F.Column, w: int) -> F.Column:
     return F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("bigint") % w
 
 
-class HeavyHitters:
+class HeavyHitters(BatchStore):
     def __init__(
         self,
         state_dir: str,
@@ -65,11 +66,6 @@ class HeavyHitters:
         self.m = candidates_per_batch
         self._cells_dir = os.path.join(state_dir, "cells")
         self._cands_dir = os.path.join(state_dir, "candidates")
-
-    def _has(self, path: str) -> bool:
-        import glob
-
-        return bool(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         key = F.col(self.key_col)
@@ -96,7 +92,7 @@ class HeavyHitters:
     def sketch(self, spark) -> DataFrame:
         """Merged global sketch: cell-wise sum of the per-batch partials."""
         return (
-            spark.read.parquet(self._cells_dir)
+            read_committed(spark, self._cells_dir, "row int, bucket bigint, c bigint")
             .groupBy("row", "bucket")
             .agg(F.sum("c").alias("c"))
         )
@@ -104,10 +100,10 @@ class HeavyHitters:
     def topk(self, spark, k: int = 10) -> DataFrame:
         """(key, estimate) for the top-k candidates by CMS estimate.
         estimate >= true count always (CMS one-sided error)."""
-        if not (self._has(self._cells_dir) and self._has(self._cands_dir)):
-            return spark.createDataFrame([], "key string, estimate bigint")
         cands = (
-            spark.read.parquet(self._cands_dir).select("key").distinct()
+            read_committed(spark, self._cands_dir, "key string, batch_n bigint")
+            .select("key")
+            .distinct()
         )
         rows = F.explode(F.array(*[F.lit(i) for i in range(self.d)])).alias("row")
         probes = cands.select("key", rows).select(
@@ -121,19 +117,4 @@ class HeavyHitters:
             .agg(F.min("c").alias("estimate"))
             .orderBy(F.desc("estimate"), F.asc("key"))
             .limit(k)
-        )
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "heavy_hitters",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
         )

@@ -22,15 +22,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 
-class StreamingDistinctSketch:
+class StreamingDistinctSketch(BatchStore):
     """Maintains per-group HLL sketches of `item_col` over a stream.
 
     State per batch: one row per observed group — (group_cols...,
@@ -48,7 +48,7 @@ class StreamingDistinctSketch:
             raise ValueError("need at least one group column")
         self.group_cols = list(group_cols)
         self.item_col = item_col
-        # DDL types for the empty-state estimates() frame; non-string
+        # DDL types for the empty-store merged()/estimates() frames; non-string
         # keys (numeric ids) should declare theirs so the empty and
         # populated paths return identical dtypes (round-2 advice).
         # Once any batch is committed, the real parquet schema wins.
@@ -65,18 +65,14 @@ class StreamingDistinctSketch:
         )
         idempotent_batch_write(sk, self._dir, batch_id)
 
-    def _has_state(self) -> bool:
-        import glob
-
-        return bool(
-            glob.glob(os.path.join(self._dir, "**", "*.parquet"), recursive=True)
-        )
-
     def merged(self, spark) -> DataFrame:
         """(group_cols..., sketch, n_rows): one union-merged sketch per
         group — re-shippable state (feed it to further rollups)."""
+        schema = ", ".join(
+            f"{c} {self.group_types.get(c, 'string')}" for c in self.group_cols
+        )
         return (
-            spark.read.parquet(self._dir)
+            read_committed(spark, self._dir, f"{schema}, sketch binary, n_rows bigint")
             .groupBy(*self.group_cols)
             .agg(
                 F.hll_union_agg("sketch").alias("sketch"),
@@ -86,31 +82,8 @@ class StreamingDistinctSketch:
 
     def estimates(self, spark) -> DataFrame:
         """(group_cols..., est_distinct, n_rows) from the merged state."""
-        if not self._has_state():
-            schema = ", ".join(
-                f"{c} {self.group_types.get(c, 'string')}"
-                for c in self.group_cols
-            )
-            return spark.createDataFrame(
-                [], f"{schema}, est_distinct bigint, n_rows bigint"
-            )
         return self.merged(spark).select(
             *self.group_cols,
             F.hll_sketch_estimate("sketch").cast("bigint").alias("est_distinct"),
             "n_rows",
-        )
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "distinct_sketch",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
         )

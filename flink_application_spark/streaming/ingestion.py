@@ -14,8 +14,9 @@ arrival order inside one micro-batch is not meaningful, ids are).
 
 Crash safety inherits from the components: the index stores, the shard
 output, and the audit log all commit through
-`sinks.idempotent_batch_write` (per-batch overwrite), so a replayed
-micro-batch reproduces byte-identical state at any crash point.
+`sinks.idempotent_batch_write` (per-batch overwrite) and read back
+through `sinks.read_committed`, so a replayed micro-batch reproduces
+byte-identical state at any crash point.
 
 This is the Spark-native generalization of the reference's whole
 topology (source → enrich/filter → dedup → partitioned sink,
@@ -27,18 +28,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.functions.text import quality_score, token_count
 from flink_application_spark.streaming.dedup_index import NearDupIndex
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     SizeCalibratedRoller,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 
-class CorpusIngestion:
+class CorpusIngestion(BatchStore):
     def __init__(
         self,
         work_dir: str,
@@ -67,10 +68,10 @@ class CorpusIngestion:
     # -- read-back surfaces -------------------------------------------
 
     def shards(self, spark) -> DataFrame:
-        return spark.read.parquet(self.shards_dir)
+        return read_committed(spark, self.shards_dir)
 
     def audit(self, spark) -> DataFrame:
-        return spark.read.parquet(self.audit_dir)
+        return read_committed(spark, self.audit_dir)
 
     # -- the per-batch pipeline ---------------------------------------
 
@@ -136,18 +137,3 @@ class CorpusIngestion:
         idempotent_batch_write(audit_row, self.audit_dir, batch_id)
         survivors.unpersist()
         clean.unpersist()
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "corpus_ingestion",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )

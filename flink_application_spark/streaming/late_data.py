@@ -18,19 +18,18 @@ main ∪ late == input, disjointly.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 
-class LateDataRouter:
+class LateDataRouter(BatchStore):
     def __init__(
         self, out_dir: str, *, ts_col: str, allowed_delay_seconds: float
     ) -> None:
@@ -43,17 +42,11 @@ class LateDataRouter:
     def _watermark_before(self, spark: SparkSession, batch_id: int) -> int | None:
         """Max event time (epoch µs) over ledger entries of EARLIER
         batches — None before any history exists."""
-        parts = []
-        for p in _glob.glob(os.path.join(self._wm, "_batch=*")):
-            try:
-                bid = int(os.path.basename(p).split("=", 1)[1])
-            except ValueError:
-                continue
-            if bid < batch_id:
-                parts.append(p)
-        if not parts:
-            return None
-        row = spark.read.parquet(*parts).agg(F.max("max_ts_us")).collect()[0]
+        row = (
+            read_committed(spark, self._wm, "max_ts_us bigint", before=batch_id)
+            .agg(F.max("max_ts_us"))
+            .collect()[0]
+        )
         return None if row[0] is None else int(row[0])
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -81,22 +74,7 @@ class LateDataRouter:
             batch_df.unpersist()
 
     def on_time(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._main)
+        return read_committed(spark, self._main)
 
     def late(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._late)
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "late_router",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )
+        return read_committed(spark, self._late)

@@ -12,7 +12,8 @@ ignored (scored-mass-only contract, same as the batch scorer);
 zero-scored-bigram docs are rejected with reason 'unscorable'.
 
 Crash safety: accept/reject/audit all commit via per-batch overwrite
-(`sinks.idempotent_batch_write`) — replay converges.
+(`sinks.idempotent_batch_write`) and read back committed-only
+(`sinks.read_committed`) — replay converges.
 """
 
 from __future__ import annotations
@@ -20,12 +21,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.plans.lm_queries import lm_model, score_with_model
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 
@@ -34,7 +35,7 @@ def train_lm_to_dir(ref_docs: DataFrame, model_dir: str) -> None:
     lm_model(ref_docs).write.mode("overwrite").parquet(model_dir)
 
 
-class LMGate:
+class LMGate(BatchStore):
     """Routes streamed documents by LM perplexity band:
     accept if lo <= mean_nll <= hi, else reject (reason = 'too_low'
     repetitive / 'too_high' gibberish / 'unscorable')."""
@@ -98,22 +99,7 @@ class LMGate:
             v.unpersist()
 
     def accepted(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._accept)
+        return read_committed(spark, self._accept)
 
     def rejected(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._reject)
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "lm_gate",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )
+        return read_committed(spark, self._reject)

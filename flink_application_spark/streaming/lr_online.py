@@ -31,12 +31,13 @@ from pyspark.sql import DataFrame
 
 from flink_application_spark.operators.lr import _one_pass
 from flink_application_spark.streaming.sinks import (
-    committed_batch_dirs,
+    BatchStore,
+    committed_batches,
     idempotent_batch_write,
 )
 
 
-class OnlineLRTrainer:
+class OnlineLRTrainer(BatchStore):
     def __init__(
         self,
         store_dir: str,
@@ -61,35 +62,29 @@ class OnlineLRTrainer:
 
     # -- store access -------------------------------------------------
 
-    def _batches(self) -> list[int]:
-        return sorted(
-            int(os.path.basename(p).split("=", 1)[1])
-            for p in committed_batch_dirs(self._dir)
-        )
-
-    def _load(self, spark, batch_id: int) -> tuple[np.ndarray, np.ndarray, int]:
+    def _load(
+        self, spark, batch_id: int | None
+    ) -> tuple[np.ndarray, np.ndarray, int]:
         """Weights committed by the latest batch STRICTLY BEFORE
-        `batch_id` (zero-init if none) plus rows seen so far."""
-        prior = [b for b in self._batches() if b < batch_id]
-        if not prior:
+        `batch_id` (any batch for None; zero-init if none) plus rows
+        seen so far."""
+        snaps = committed_batches(self._dir, batch_id)
+        if not snaps:
             return (
                 np.zeros((self.n_classes, self.dim), dtype=np.float64),
                 np.zeros(self.n_classes, dtype=np.float64),
                 0,
             )
-        row = spark.read.parquet(
-            os.path.join(self._dir, f"_batch={max(prior)}")
-        ).collect()[0]
+        row = spark.read.parquet(snaps[-1][1]).collect()[0]
         w = np.asarray(row["w"], dtype=np.float64).reshape(self.n_classes, self.dim)
         b = np.asarray(row["b"], dtype=np.float64)
         return w, b, int(row["n_seen"])
 
     def weights(self, spark) -> tuple[np.ndarray, np.ndarray, int]:
         """The current model: latest committed weights + rows seen."""
-        done = self._batches()
-        if not done:
+        if not committed_batches(self._dir):
             raise ValueError("no committed weight batches in the store")
-        return self._load(spark, max(done) + 1)
+        return self._load(spark, None)
 
     # -- per-batch maintenance ----------------------------------------
 
@@ -124,13 +119,3 @@ class OnlineLRTrainer:
             "w array<double>, b array<double>, n_seen bigint",
         )
         idempotent_batch_write(out, self._dir, batch_id)
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        """Wire the trainer into a streaming query (availableNow file
-        streams in tests; any micro-batch source in production)."""
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

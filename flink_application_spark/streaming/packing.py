@@ -14,9 +14,8 @@ tests/test_streaming_packing.py).
 Per micro-batch (`foreachBatch`):
 
 1. read the cursor committed by the latest batch strictly before this
-   one (`_SUCCESS`-gated — the shared replay-safety discipline: a
-   replayed batch re-reads the SAME cursor and rewrites the same
-   spans);
+   one (`sinks.committed_batches(root, before=batch)`: a replayed
+   batch re-reads the SAME cursor and rewrites the same spans);
 2. pack the batch's documents (ascending id within the batch; arrival
    order across batches defines the concatenation order) with
    `packed_spans(..., base_offset=cursor)`;
@@ -35,18 +34,19 @@ pipeline consuming a shuffled corpus stream wants anyway.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, functions as F
 
 from flink_application_spark.operators.packing import packed_spans
 from flink_application_spark.streaming.sinks import (
-    committed_batch_dirs,
+    BatchStore,
+    committed_batches,
     idempotent_batch_write,
+    read_committed,
 )
 
 
-class PackingStream:
+class PackingStream(BatchStore):
     def __init__(
         self,
         store_dir: str,
@@ -65,35 +65,20 @@ class PackingStream:
     # -- store access -------------------------------------------------
 
     def _cursor_before(self, spark, batch_id: int | None) -> int:
-        best_bid, best_dir = -1, None
-        for d in committed_batch_dirs(self._cursor_dir):
-            m = re.search(r"_batch=(\d+)$", d)
-            if not m:
-                continue
-            bid = int(m.group(1))
-            if (batch_id is None or bid < batch_id) and bid > best_bid:
-                best_bid, best_dir = bid, d
-        if best_dir is None:
+        snaps = committed_batches(self._cursor_dir, batch_id)
+        if not snaps:
             return 0
-        return spark.read.parquet(best_dir).collect()[0]["cursor"]
+        return spark.read.parquet(snaps[-1][1]).collect()[0]["cursor"]
 
     def spans(self, spark) -> DataFrame:
         """All spans committed so far (bin_id, doc_id, doc_offset,
         bin_offset, span_len)."""
-        done = committed_batch_dirs(self._spans_dir)
-        if not done:
-            return spark.createDataFrame(
-                [],
-                f"bin_id bigint, {self.id_col} bigint, doc_offset bigint,"
-                " bin_offset bigint, span_len bigint",
-            )
-        return (
-            spark.read.option("basePath", self._spans_dir)
-            .parquet(*done)
-            .select(
-                "bin_id", self.id_col, "doc_offset", "bin_offset", "span_len"
-            )
-        )
+        return read_committed(
+            spark,
+            self._spans_dir,
+            f"bin_id bigint, {self.id_col} bigint, doc_offset bigint,"
+            " bin_offset bigint, span_len bigint",
+        ).select("bin_id", self.id_col, "doc_offset", "bin_offset", "span_len")
 
     def cursor(self, spark) -> int:
         """Total tokens packed by all committed batches."""
@@ -122,11 +107,3 @@ class PackingStream:
             [(batch_id, int(base + batch_tokens))], "batch_id bigint, cursor bigint"
         )
         idempotent_batch_write(cursor_df, self._cursor_dir, batch_id)
-
-    def attach(self, doc_stream: DataFrame, checkpoint: str):
-        return (
-            doc_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

@@ -24,15 +24,15 @@ import math
 import os
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.streaming.sinks import (
+    BatchStore,
     idempotent_batch_write,
-    trigger_kwargs,
+    read_committed,
 )
 
 
-class StreamingQuantileSketch:
+class StreamingQuantileSketch(BatchStore):
     def __init__(
         self,
         state_dir: str,
@@ -76,7 +76,7 @@ class StreamingQuantileSketch:
 
     def merged(self, spark) -> DataFrame:
         return (
-            spark.read.parquet(self._dir)
+            read_committed(spark, self._dir)
             .groupBy(*self.group_cols, "sign", "bin")
             .agg(F.sum("c").alias("c"))
         )
@@ -124,18 +124,3 @@ class StreamingQuantileSketch:
                 est[q] = val
             out[key] = est
         return out
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "quantile_sketch",
-    ) -> StreamingQuery:
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )

@@ -27,8 +27,14 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from flink_application_spark.streaming.sinks import (
+    BatchStore,
+    committed_batches,
+    idempotent_batch_write,
+)
 
-class BottomKSample:
+
+class BottomKSample(BatchStore):
     def __init__(self, store_dir: str, *, k: int = 100, id_col: str = "doc_id") -> None:
         self.k = k
         self.id_col = id_col
@@ -36,28 +42,16 @@ class BottomKSample:
 
     # -- store access -------------------------------------------------
 
-    def _batches(self) -> list[int]:
-        # _SUCCESS-gated listing shared with every per-batch store
-        # (sinks.committed_batch_dirs holds the crash-window rationale)
-        from flink_application_spark.streaming.sinks import committed_batch_dirs
-
-        return sorted(
-            int(os.path.basename(p).split("=", 1)[1])
-            for p in committed_batch_dirs(self._dir)
-        )
-
-    def _latest_before(self, spark, batch_id: int) -> DataFrame | None:
-        prior = [b for b in self._batches() if b < batch_id]
-        if not prior:
-            return None
-        return spark.read.parquet(os.path.join(self._dir, f"_batch={max(prior)}"))
+    def _latest_before(self, spark, batch_id: int | None) -> DataFrame | None:
+        snaps = committed_batches(self._dir, batch_id)
+        return spark.read.parquet(snaps[-1][1]) if snaps else None
 
     def sample(self, spark) -> DataFrame:
         """The current k-sample (payload columns + rkey)."""
-        done = self._batches()
-        if not done:
+        cur = self._latest_before(spark, None)
+        if cur is None:
             raise ValueError("no completed batches in the sample store")
-        return spark.read.parquet(os.path.join(self._dir, f"_batch={max(done)}"))
+        return cur
 
     # -- per-batch maintenance ----------------------------------------
 
@@ -80,14 +74,4 @@ class BottomKSample:
             cur = cur.unionByName(prev)
         # a replayed batch overwrites its own directory from the same
         # strictly-earlier predecessor — same output, no duplication
-        self.bottom_k(cur).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self._dir, f"_batch={batch_id}")
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        idempotent_batch_write(self.bottom_k(cur).coalesce(1), self._dir, batch_id)

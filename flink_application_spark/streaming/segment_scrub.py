@@ -9,8 +9,8 @@ Same store discipline as `streaming.bloom_dedup.BloomDedupStream`:
 
 - both stores commit via `sinks.idempotent_batch_write` (per-batch
   `_batch=<id>` overwrite → replay-safe, never double-applies);
-- reads trust only `_batch` dirs bearing Spark's `_SUCCESS` marker and
-  only batches strictly BEFORE the current one (a replayed batch must
+- reads go through `sinks.read_committed(..., before=batch)`: committed
+  batches strictly BEFORE the current one only (a replayed batch must
   not meet its own fingerprints — it would drop every segment);
 - the fingerprint store holds 16-byte md5 keys only (hive-partitioned
   on a byte prefix so membership joins prune), never segment text, so
@@ -32,12 +32,16 @@ from flink_application_spark.operators.dedup import (
     segment_rows,
     segment_scrub_assemble,
 )
-from flink_application_spark.streaming.sinks import idempotent_batch_write
+from flink_application_spark.streaming.sinks import (
+    BatchStore,
+    idempotent_batch_write,
+    read_committed,
+)
 
 _PCELLS = 256
 
 
-class SegmentScrubStream:
+class SegmentScrubStream(BatchStore):
     def __init__(self, store_dir: str, *, seg: int = 16) -> None:
         self.store_dir = store_dir
         self.seg = seg
@@ -46,24 +50,13 @@ class SegmentScrubStream:
 
     # -- store access -------------------------------------------------
 
-    def _committed(self, root: str) -> list[str]:
-        from flink_application_spark.streaming.sinks import committed_batch_dirs
-
-        return committed_batch_dirs(root)
-
     def scrubbed(self, spark) -> DataFrame:
         """(doc_id, n_segs, n_dropped, scrubbed_text) so far."""
-        done = self._committed(self._docs_dir)
-        if not done:
-            return spark.createDataFrame(
-                [],
-                "doc_id bigint, n_segs bigint, n_dropped bigint, scrubbed_text string",
-            )
-        return (
-            spark.read.option("basePath", self._docs_dir)
-            .parquet(*done)
-            .select("doc_id", "n_segs", "n_dropped", "scrubbed_text")
-        )
+        return read_committed(
+            spark,
+            self._docs_dir,
+            "doc_id bigint, n_segs bigint, n_dropped bigint, scrubbed_text string",
+        ).select("doc_id", "n_segs", "n_dropped", "scrubbed_text")
 
     # -- per-batch maintenance ----------------------------------------
 
@@ -76,24 +69,14 @@ class SegmentScrubStream:
 
         # seen-in-earlier-batch: md5-key semi-join against the store,
         # restricted to committed batches strictly before this one
-        committed = self._committed(self._fp_dir)
-        old = None
-        if committed:
-            old = (
-                spark.read.option("basePath", self._fp_dir)
-                .parquet(*committed)
-                .filter(F.col("_batch") < batch_id)
-                .select("pcell", "h")
-            )
-            hit_old = (
-                segs.join(old, ["pcell", "h"], "left_semi")
-                .select("doc_id", "seg_idx")
-                .withColumn("old_hit", F.lit(1))
-            )
-        else:
-            hit_old = spark.createDataFrame(
-                [], "doc_id bigint, seg_idx int, old_hit int"
-            )
+        old = read_committed(
+            spark, self._fp_dir, segs.select("pcell", "h").schema, before=batch_id
+        ).select("pcell", "h")
+        hit_old = (
+            segs.join(old, ["pcell", "h"], "left_semi")
+            .select("doc_id", "seg_idx")
+            .withColumn("old_hit", F.lit(1))
+        )
 
         # first-within-batch: the batch operator's struct-min rule
         firsts = segs.groupBy("h").agg(
@@ -131,9 +114,9 @@ class SegmentScrubStream:
         # DISTINCT segment. Replay-safe: reads are already restricted
         # to batches strictly before the reader, and a replayed batch
         # recomputes the same anti-join against the same earlier set.
-        fresh = segs.select("pcell", "h").distinct()
-        if old is not None:
-            fresh = fresh.join(old, ["pcell", "h"], "left_anti")
+        fresh = (
+            segs.select("pcell", "h").distinct().join(old, ["pcell", "h"], "left_anti")
+        )
         idempotent_batch_write(
             fresh,
             self._fp_dir,
@@ -141,13 +124,3 @@ class SegmentScrubStream:
             partition_by=("pcell",),
         )
         segs.unpersist()
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        """Wire the maintenance into a streaming query (availableNow
-        file streams in tests; any micro-batch source in production)."""
-        return (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

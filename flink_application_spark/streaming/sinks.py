@@ -14,6 +14,14 @@ like Flink's per-job checkpoint path. Two-queries-one-path fights over
 the committer, so multi-sink fan-in is union-before-write (R4): the
 enrichment's two paths meet in one ``unionByName`` before the sink
 (streaming/pipeline.py).
+
+Per-batch store contract (the analogue of Flink's checkpointed
+operator state, EnrichmentApp.java:48): every ``_batch=<id>`` store
+commits a micro-batch with `idempotent_batch_write`, reads only what
+`committed_batches` lists (`read_committed` for a merged read, the
+last entry for a snapshot) and attaches through `BatchStore.attach`.
+A reader never sees a crash partial, and a replay lands on the state
+of an uninterrupted run.
 """
 
 from __future__ import annotations
@@ -93,24 +101,76 @@ def idempotent_batch_write(
     return sub
 
 
-def committed_batch_dirs(root: str) -> list[str]:
-    """``_batch=<id>`` subdirectories bearing Spark's ``_SUCCESS``
-    commit marker — the read-side half of ``idempotent_batch_write``'s
-    crash-safety contract, shared by every additive per-batch store
-    (Bloom dedup, segment scrub, reservoir sample). A crash mid-write
-    leaves a partial ``_batch`` dir whose parquet files would read as a
-    silently-short batch; the replay overwrites it, but a read BETWEEN
-    crash and restart must not see it. Keeping the discipline in ONE
-    place means a future commit-scheme change cannot silently reopen
-    the crash window in one store but not another."""
+def committed_batches(root: str, before: int | None = None) -> list[tuple[int, str]]:
+    """``(id, dir)`` of every ``_batch=<id>`` subdirectory bearing
+    Spark's ``_SUCCESS`` commit marker, in numeric id order (ids are
+    signed: `compact_batches` folds into negative ones); with
+    ``before``, only ids strictly below it.
+
+    The read-side half of ``idempotent_batch_write``'s crash-safety
+    contract and the ONE listing every per-batch store reads through.
+    A crash mid-write leaves a partial ``_batch`` dir whose parquet
+    files would read as a silently-short batch; the replay overwrites
+    it, but a read BETWEEN crash and restart must not see it."""
+    import os
+
+    if not os.path.isdir(root):
+        return []
+    out = []
+    for name in os.listdir(root):
+        key, _, val = name.partition("=")
+        d = os.path.join(root, name)
+        if key != "_batch" or not os.path.exists(os.path.join(d, "_SUCCESS")):
+            continue
+        try:
+            bid = int(val)
+        except ValueError:  # not a batch id, e.g. compaction's `.tmp` dir
+            continue
+        if before is None or bid < before:
+            out.append((bid, d))
+    return sorted(out)
+
+
+def read_committed(
+    spark, root: str, schema=None, *, before: int | None = None
+) -> DataFrame:
+    """ONE read over the committed batch dirs of `committed_batches`
+    (``before`` exclusive). ``basePath`` keeps partition discovery
+    anchored at ``root``, so ``_batch`` and any hive columns below it
+    come out as ``spark.read.parquet(root)`` would give them.
+
+    A committed dir holding no data file (an empty batch written with
+    ``partition_by``) contributes no rows. With nothing to read, the
+    result is an empty frame of ``schema`` (DDL string or StructType)
+    plus ``_batch``; without a schema, Spark's own schema-inference
+    error surfaces, as a bare read of an empty store would."""
     import glob
     import os
 
-    return sorted(
-        p
-        for p in glob.glob(os.path.join(root, "_batch=*"))
-        if os.path.exists(os.path.join(p, "_SUCCESS"))
-    )
+    from pyspark.sql import functions as F
+
+    dirs = [d for _, d in committed_batches(root, before)]
+    if schema is not None and not any(
+        glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True) for d in dirs
+    ):
+        empty = spark.createDataFrame([], schema)
+        return empty.withColumn("_batch", F.lit(None).cast("int"))
+    return spark.read.option("basePath", root).parquet(*dirs)
+
+
+class BatchStore:
+    """Base of every ``_batch=<id>`` streaming store: subclasses define
+    ``process_batch(batch_df, batch_id)`` (commit through
+    `idempotent_batch_write`, read through `read_committed`) and share
+    this one streaming attachment."""
+
+    def attach(self, stream_df: DataFrame, checkpoint: str) -> StreamingQuery:
+        return (
+            stream_df.writeStream.foreachBatch(self.process_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
 
 
 def _partition_keys(batch_dir: str) -> list[str]:

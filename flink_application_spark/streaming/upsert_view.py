@@ -24,13 +24,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_application_spark.operators.merge import apply_changelog
-from flink_application_spark.streaming.sinks import trigger_kwargs
+from flink_application_spark.streaming.sinks import BatchStore
 
 
-class UpsertView:
+class UpsertView(BatchStore):
     def __init__(
         self,
         work_dir: str,
@@ -102,18 +101,3 @@ class UpsertView:
             base, batch_df, self.key_cols, self.seq_col, self.op_col
         )
         merged.write.mode("overwrite").parquet(self._vdir(batch_id))
-
-    def attach(
-        self,
-        changelog_stream: DataFrame,
-        checkpoint: str,
-        trigger: str | None = None,
-        query_name: str = "upsert_view",
-    ) -> StreamingQuery:
-        return (
-            changelog_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name)
-            .trigger(**trigger_kwargs(trigger))
-            .start()
-        )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from flink_application_spark.operators.lr_exact import lr_fit_exact
 
@@ -143,3 +144,34 @@ def test_registered_profile_query_schema(spark):
     assert df.columns == ["iteration", "loss_mu", "correct", "w_l1"]
     rows = df.collect()
     assert [r["iteration"] for r in rows] == list(range(1, _ITERS + 1))
+
+
+def test_gradient_exact_past_int64(spark):
+    """Residual × coordinate sums past 2^63 must not wrap: the chunk
+    falls back from the int64 matmul to exact Python ints."""
+    from flink_application_spark.operators.lr_exact import _round_cells
+
+    big = 2**31  # squares stay in BIGINT for the engine-side loss
+    rows = [
+        ([big, -7], [4, 2**40], 0, 0),
+        ([big, 5], [3, -(2**41)], 1, 1),
+        ([-big, 1], [-1, 2**42], 0, 1),
+    ]
+    scored = spark.createDataFrame(
+        rows, "rqs array<bigint>, e array<bigint>, pred int, label int"
+    ).coalesce(1)
+    got = {
+        (r["class"], r["pos0"]): int(r["g"])
+        for r in _round_cells(scored)
+        .groupBy("class", "pos0")
+        .agg(F.sum("g").alias("g"))
+        .collect()
+        if r["class"] >= 0
+    }
+    want = {
+        (c, p): sum(rq[c] * e[p] for rq, e, _, _ in rows)
+        for c in range(2)
+        for p in range(2)
+    }
+    assert max(abs(v) for v in want.values()) >= 2**63
+    assert got == want

@@ -104,11 +104,10 @@ def test_fingerprint_store_bounded_by_distinct_segments(spark, tmp_path):
     st.process_batch(docs.filter(F.col("doc_id") >= 4), 2)
 
     from flink_application_spark.operators.dedup import segment_rows
+    from flink_application_spark.streaming.sinks import read_committed
 
     n_distinct = segment_rows(docs, _SEG).select("h").distinct().count()
-    stored = spark.read.option("basePath", st._fp_dir).parquet(
-        *st._committed(st._fp_dir)
-    )
+    stored = read_committed(spark, st._fp_dir)
     assert stored.count() == n_distinct
     assert stored.select("h").distinct().count() == n_distinct
     # no hash is stored by more than one batch (the anti-join at work);

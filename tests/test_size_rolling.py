@@ -108,8 +108,8 @@ def test_compact_batches_event_sink_mode(spark, tmp_path):
     row multiset, and (c) collapses the file count — including the
     single-batch case, where the fan-out is within the batch."""
     from flink_application_spark.streaming.sinks import (
+        committed_batches,
         compact_batches,
-        committed_batch_dirs,
         idempotent_batch_write,
     )
 
@@ -129,9 +129,7 @@ def test_compact_batches_event_sink_mode(spark, tmp_path):
         )
     pre_files = glob.glob(f"{root}/**/*.parquet", recursive=True)
     pre_rows = sorted(r["id"] for r in spark.read.parquet(root).collect())
-    max_bid = max(
-        int(os.path.basename(p).split("=", 1)[1]) for p in committed_batch_dirs(root)
-    )
+    max_bid = committed_batches(root)[-1][0]
     absorbed = compact_batches(
         spark, root, min_live_batch=max_bid + 1, partition_by=("event_date", "probe")
     )
