@@ -30,7 +30,9 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """try_divide: a zero-norm or empty side yields NULL (DuckDB's
+    0/0 → NULL) instead of an ANSI DIVIDE_BY_ZERO."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def cosine_arrow(a: Column, b: Column) -> Column:
@@ -42,29 +44,16 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     op order — dot / (norm_a * norm_b). Returns the RAW double;
     callers keep ``F.round`` Spark-side (HALF_UP ≠ numpy half-even).
 
-    Use for joins that score MANY pairs: Catalyst higher-order
-    functions run interpreted (~7 µs/pair — guide §4.1), so a
-    million-candidate scorer spends seconds in lambda dispatch that
-    the vectorized path does in milliseconds (transfer-bound). For a
-    handful of pairs the fold form is fine and avoids the Arrow
-    round-trip.
+    `operators/similarity.py` decides when a join's pairs are scored
+    here instead of by the fold.
 
-    NULL inputs and length-mismatched pairs yield NULL, matching the
-    fold's zip_with padding semantics. (A non-NULL vector containing
-    NULL ELEMENTS arrives in pandas as NaN and propagates as NaN
-    where the fold yields NULL — no fixture or corpus this engine
+    NULL inputs, length-mismatched pairs and zero-norm or empty vectors
+    yield NULL, as the fold does: the NaN result is coerced by the
+    pandas Float64 masked array to <NA> → SQL NULL. (A non-NULL vector
+    containing NULL ELEMENTS arrives in pandas as NaN and propagates as
+    NaN where the fold yields NULL — no fixture or corpus this engine
     reads has element-level NULLs; the equality pins would catch one
-    appearing.)
-
-    Degenerate vectors DIVERGE from the fold (round-11 ADVICE, now
-    stated honestly and pinned in tests/test_similarity_arrow.py):
-    for zero-norm or empty inputs the fold's 0/0 division THROWS
-    under the session's ANSI mode, while this path's NaN result is
-    coerced by the pandas Float64 masked array to <NA> → SQL NULL
-    (DuckDB's 0/0 → NULL behavior). Every registered consumer filters
-    zero-norm vectors upstream or scores fixture embeddings that have
-    none, so the divergence is unreachable on query paths — callers
-    introducing degenerate inputs must filter them first."""
+    appearing.)"""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -85,8 +74,7 @@ def cosine_arrow(a: Column, b: Column) -> Column:
             rows = idx[same & (la == d)]
             if d == 0:
                 # empty arrays: NaN assigned into the Float64 masked
-                # array coerces to <NA> → SQL NULL (the ANSI fold
-                # would THROW on the 0/0 here — see the docstring)
+                # array coerces to <NA> → SQL NULL
                 out[rows] = float("nan")
                 continue
             A = np.array(xa.iloc[rows].tolist(), dtype=np.float64)
@@ -108,10 +96,14 @@ def sign_bits(a: Column, n_bits: int) -> Column:
     """Axis-aligned random-hyperplane LSH bucket: the sign pattern of the
     first ``n_bits`` coordinates as a '01' string. Cheap, deterministic,
     and a genuine LSH family for cosine distance (each coordinate is a
-    hyperplane through the origin)."""
+    hyperplane through the origin). A coordinate past the end of a
+    short or empty vector reads as NULL → '0', as DuckDB's
+    out-of-range list index does, instead of an ANSI index error."""
     return F.concat(
         *[
-            F.when(F.element_at(a, i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
+            F.when(F.try_element_at(a, F.lit(i + 1)) >= 0, F.lit("1")).otherwise(
+                F.lit("0")
+            )
             for i in range(n_bits)
         ]
     )

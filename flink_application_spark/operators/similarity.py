@@ -2,16 +2,26 @@
 
 Two strategies:
 
-- **Brute-force top-k** — baseline: broadcast the (small) query set
-  against the corpus; cosine is a JVM-side zip_with/aggregate fold.
-  At 100 TB the corpus side stays partitioned; cost is one scan per
-  query batch — correct but O(|Q|·|C|).
-- **LSH-bucketed ANN** — scale path: both sides get a sign-bit bucket
-  key (axis-aligned hyperplanes); the join is equi on bucket, so
-  Catalyst plans a hash join instead of a cross product. Recall is
-  tunable via n_bits (fewer bits → bigger buckets → higher recall).
-  An IVF variant would k-means the corpus and probe nearest centroids;
-  bucketing is the deterministic, oracle-able stand-in.
+- **Brute-force top-k** — exact baseline: the query set against the
+  corpus, O(|Q|·|C|) by definition. At 100 TB the corpus side stays a
+  partitioned scan; cost is one scan per query batch.
+- **Bucketed ANN** — scale path: sign-bit LSH buckets or IVF inverted
+  lists give both sides a key and the join is equi on it, so Catalyst
+  plans a hash join instead of a cross product. Recall tunes via
+  n_bits / n_probe.
+
+This module owns pair-cosine arithmetic and its backend choice; no
+caller picks one. Both backends compute dot / (‖q‖·‖c‖) as float64
+left-to-right coordinate folds with the HALF_UP round to 6 kept in
+Spark, so they are bit-equal (pinned in tests/test_similarity_arrow.py),
+and a zero-norm or empty vector scores NULL in both, as in DuckDB:
+
+- the JVM fold (`_scored`): no Python boundary, but Catalyst runs it
+  interpreted at ~7 µs/pair;
+- the Arrow kernels (`_brute_arrow`, `vectors.cosine_arrow`): a fixed
+  JVM↔Python round-trip per call, then vectorized numpy.
+
+`_self_query` is the rule between them.
 """
 
 from __future__ import annotations
@@ -21,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from flink_application_spark.functions.vectors import (
     cosine,
     cosine_arrow,
+    dot,
+    norm,
     sign_bits,
 )
 
@@ -36,57 +48,91 @@ def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk_fold(
-    queries: DataFrame, corpus: DataFrame, k: int = 10
+def _self_query(queries: DataFrame, corpus: DataFrame) -> bool:
+    """The backend rule: Arrow only when the query set IS the corpus —
+    the all-points kNN shape, |Q|·|C| = n² pairs, where the fold's
+    per-pair cost dominates (Arrow measured 2.7-7× faster at sf0.1).
+    Every other call is a bounded query batch, where the Arrow
+    round-trip's fixed cost decides the wall and the fold wins.
+    `sameSemantics` compares analyzed plans and runs no Spark job."""
+    return queries.sameSemantics(corpus)
+
+
+def _scored(
+    queries: DataFrame,
+    corpus: DataFrame,
+    pair,
+    *,
+    arrow: bool = False,
+    q_cols=(),
+    c_cols=(),
+    keep=(),
 ) -> DataFrame:
-    """Exact cosine top-k, pure JVM-fold form. `queries` must be small
-    (it is broadcast); rows with query_id == vec_id are excluded
-    (self-match).
+    """The one pair-cosine scorer. Sides are
+    q = (query_id, qv, _qn, *q_cols) from ``queries`` and
+    c = (vec_id, embedding, _cn, *c_cols) from ``corpus``; ``pair(q, c)``
+    joins them, self-matches are dropped, and the result is
+    (query_id, vec_id, *keep, cosine) with cosine rounded to 6.
 
-    Norms are projected ONCE per side before the pair join — the
-    interpreted fold runs |Q| + |C| times instead of 2·|Q|·|C|; only
-    the dot product is per-pair. This is the arithmetic REFERENCE for
-    the Arrow path below (tests pin exact equality); the interpreted
-    per-pair fold costs ~7 µs/pair, which is the whole wall time once
-    |Q|·|C| reaches millions — use `brute_force_topk`."""
-    from flink_application_spark.functions.vectors import dot, norm
-
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            norm(F.col("embedding")).alias("_qn"),
-        )
+    Fold: each side's norm is projected ONCE before the join, so the
+    interpreted norm fold runs |Q| + |C| times and only the dot product
+    runs per pair; try_divide makes a zero-norm side NULL instead of an
+    ANSI DIVIDE_BY_ZERO. ``arrow=True`` scores the same pairs with
+    `cosine_arrow` (the unused norms are pruned from the plan)."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        norm(F.col("embedding")).alias("_qn"),
+        *q_cols,
     )
-    c = corpus.select("vec_id", "embedding", norm(F.col("embedding")).alias("_cn"))
-    scored = (
-        c.crossJoin(q)
+    c = corpus.select(
+        "vec_id", "embedding", norm(F.col("embedding")).alias("_cn"), *c_cols
+    )
+    if arrow:
+        cos = cosine_arrow(F.col("qv"), F.col("embedding"))
+    else:
+        cos = F.try_divide(
+            dot(F.col("qv"), F.col("embedding")), F.col("_qn") * F.col("_cn")
+        )
+    return (
+        pair(q, c)
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("qv"), F.col("embedding")) / (F.col("_qn") * F.col("_cn")), 6
-            ).alias("cosine"),
-        )
+        .select("query_id", "vec_id", *keep, F.round(cos, 6).alias("cosine"))
     )
-    return _topk_per_query(scored, k)
+
+
+def _cross(q: DataFrame, c: DataFrame) -> DataFrame:
+    return c.crossJoin(F.broadcast(q))
 
 
 def brute_force_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 10
 ) -> DataFrame:
-    """Exact cosine top-k, Arrow-vectorized scoring. Same contract and
-    BIT-IDENTICAL results to `brute_force_topk_fold` (pinned by
-    tests/test_similarity_arrow.py): the query matrix is collected
-    (same small-side bound as the fold form's broadcast), each corpus
-    Arrow batch scores against it with float64 accumulation in the
-    SAME left-to-right coordinate order as the JVM fold
-    (acc += C[:,j]·Q[:,j] per j — modular of the kmeans/pq rewrites),
-    division dot/(cn·qn) in IEEE float64, and the final HALF_UP
-    F.round(…, 6) stays in Spark. Rows whose embedding is NULL or
-    dimension-mismatched emit NaN, which the pandas→Arrow conversion
-    maps to SQL NULL — exactly the fold's null-cosine behavior.
+    """Exact cosine top-k; rows with query_id == vec_id are excluded
+    (self-match), as are NULL ids. The query set must be small (it is
+    broadcast or collected) unless it is the corpus itself, which takes
+    the Arrow backend (`_self_query`)."""
+    if _self_query(queries, corpus):
+        return _brute_arrow(queries, corpus, k)
+    return _brute_fold(queries, corpus, k)
+
+
+def _brute_fold(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Fold backend: broadcast query set × corpus scan; the arithmetic
+    reference the Arrow backend is pinned against."""
+    return _topk_per_query(_scored(queries, corpus, _cross), k)
+
+
+def _brute_arrow(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Arrow backend, bit-identical to `_brute_fold`: the query matrix
+    is collected, each corpus Arrow batch scores against it with
+    float64 accumulation in the SAME left-to-right coordinate order as
+    the JVM fold (acc += C[:,j]·Q[:,j] per j — modular of the kmeans/pq
+    rewrites), division dot/(cn·qn) in IEEE float64, and the final
+    HALF_UP F.round(…, 6) stays in Spark. Rows whose embedding is NULL,
+    dimension-mismatched or zero-norm emit NaN, which the pandas→Arrow
+    conversion maps to SQL NULL — the fold's NULL cosine. NULL-id rows
+    are dropped on both sides, as the fold's `vec_id != query_id` does.
 
     At 100 TB the corpus side stays a partitioned scan; per-batch cost
     is one (batch × |Q|) accumulation, no per-pair interpreted
@@ -96,7 +142,8 @@ def brute_force_topk(
 
     from flink_application_spark.catalog import fan_out
 
-    qrows = queries.select("vec_id", "embedding").collect()
+    has_id = F.col("vec_id").isNotNull()
+    qrows = queries.filter(has_id).select("vec_id", "embedding").collect()
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     qvecs = [
         None if r["embedding"] is None else np.asarray(r["embedding"], dtype=np.float64)
@@ -106,7 +153,7 @@ def brute_force_topk(
     if len(dims) != 1:
         # mixed query dims (or all-NULL queries): the fold form defines
         # the semantics pairwise; don't try to matrix it
-        return brute_force_topk_fold(queries, corpus, k=k)
+        return _brute_fold(queries, corpus, k)
     d = dims.pop()
     nq = len(qids)
     qvalid = np.array([v is not None for v in qvecs])
@@ -158,7 +205,7 @@ def brute_force_topk(
             )
             yield out[out["query_id"] != out["vec_id"]]
 
-    scored = fan_out(corpus.select("vec_id", "embedding")).mapInPandas(
+    scored = fan_out(corpus.filter(has_id).select("vec_id", "embedding")).mapInPandas(
         part, schema="query_id bigint, vec_id bigint, cosine double"
     )
     scored = scored.select(
@@ -172,30 +219,13 @@ def lsh_ann_topk(
 ) -> DataFrame:
     """Approximate top-k: candidates share the sign-bit LSH bucket.
     Equi-join on bucket key — no cross product, shuffle on bucket."""
-    from flink_application_spark.functions.vectors import dot, norm
-
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("_qn"),
-        sign_bits(F.col("embedding"), n_bits).alias("bucket"),
-    )
-    c = corpus.select(
-        "vec_id",
-        "embedding",
-        norm(F.col("embedding")).alias("_cn"),
-        sign_bits(F.col("embedding"), n_bits).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("qv"), F.col("embedding")) / (F.col("_qn") * F.col("_cn")), 6
-            ).alias("cosine"),
-        )
+    bucket = sign_bits(F.col("embedding"), n_bits).alias("bucket")
+    scored = _scored(
+        queries,
+        corpus,
+        lambda q, c: c.join(F.broadcast(q), "bucket"),
+        q_cols=(bucket,),
+        c_cols=(bucket,),
     )
     return _topk_per_query(scored, k)
 
@@ -408,30 +438,28 @@ def _assign_udf(centroids, n_probe: int):
     return nearest
 
 
-# Candidate-pair count above which the IVF scorers switch from the
-# interpreted JVM fold to the Arrow pandas_udf (bit-equal — pinned in
-# tests/test_similarity_arrow.py). The fold costs ~7 µs/pair in lambda
-# dispatch (guide §4.1); the Arrow path adds a fixed JVM↔Python
-# round-trip plus worker spin-up that the round-11 driver runs priced
-# at ~0.3-0.5 s — so Arrow only wins once the fold's per-pair cost
-# clears that fixed overhead, around tens of thousands of pairs.
-# Small-query consumers (≤ 20 queries × 4 probes ≈ ≤ 5k pairs) stay on
-# the fold; the full-corpus-as-queries consumers (~1M pairs at sf0.1)
-# opt in via est_pairs (round-11 verdict item 1: the unconditional
-# Arrow swap regressed every small-pair consumer it touched).
-ARROW_SCORER_MIN_PAIRS = 50_000
-
-
-def _pair_cosine(qv: Column, emb: Column, est_pairs: int | None) -> Column:
-    """Rounded pair cosine with a pair-count-adaptive backend: the
-    JVM fold below ARROW_SCORER_MIN_PAIRS estimated candidate pairs
-    (or when the caller has no estimate), the Arrow kernel above it.
-    Both backends are bit-equal, so the choice can never change query
-    results — only which side of the JVM/Python boundary does the
-    arithmetic."""
-    if est_pairs is not None and est_pairs >= ARROW_SCORER_MIN_PAIRS:
-        return F.round(cosine_arrow(qv, emb), 6)
-    return F.round(cosine(qv, emb), 6)
+def _ivf_candidates(
+    queries: DataFrame,
+    corpus: DataFrame,
+    n_centroids: int,
+    n_probe: int,
+    centroids,
+) -> DataFrame:
+    """Distinct scored (query_id, vec_id, cosine) candidates of the
+    trained IVF index — the candidate stage `ivf_topk` ranks and
+    `radius_search(use_ann=True)` thresholds."""
+    if centroids is None:
+        centroids = train_centroids(corpus, n_centroids=n_centroids)
+    assign1 = _assign_udf(centroids, 1)
+    assignp = _assign_udf(centroids, n_probe)
+    return _scored(
+        queries,
+        corpus,
+        lambda q, c: c.join(F.broadcast(q), "cluster"),
+        arrow=_self_query(queries, corpus),
+        q_cols=(F.explode(assignp(F.col("embedding"))).alias("cluster"),),
+        c_cols=(F.element_at(assign1(F.col("embedding")), 1).alias("cluster"),),
+    ).distinct()  # a (query, vec) pair can meet in several probed lists
 
 
 def ivf_topk(
@@ -441,7 +469,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     centroids=None,
-    est_pairs: int | None = None,
 ) -> DataFrame:
     """IVF ANN: corpus vectors are inverted-listed under their nearest
     centroid (1 assignment pass, Arrow-batched); queries probe their
@@ -458,37 +485,9 @@ def ivf_topk(
     the fully-distributed Lloyd's trainer slots into the same index
     (recall-tested in tests/test_ivf.py).
     """
-    if centroids is None:
-        centroids = train_centroids(corpus, n_centroids=n_centroids)
-
-    assign1 = _assign_udf(centroids, 1)
-    c = corpus.select(
-        "vec_id", "embedding", F.element_at(assign1(F.col("embedding")), 1).alias("cluster")
+    return _topk_per_query(
+        _ivf_candidates(queries, corpus, n_centroids, n_probe, centroids), k
     )
-    assignp = _assign_udf(centroids, n_probe)
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.explode(assignp(F.col("embedding"))).alias("cluster"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cluster")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            # pair-count-adaptive scoring (see _pair_cosine):
-            # full-corpus-as-queries consumers (emb_label_noise_knn_ann,
-            # ~1M pairs) pass est_pairs and get the Arrow kernel; the
-            # handful-of-queries consumers keep the fold and skip the
-            # Arrow round-trip
-            _pair_cosine(F.col("qv"), F.col("embedding"), est_pairs).alias(
-                "cosine"
-            ),
-        )
-        .distinct()  # a (query, vec) pair can meet in several probed lists
-    )
-    return _topk_per_query(scored, k)
 
 
 def ivf_candidates_seeded(
@@ -497,7 +496,6 @@ def ivf_candidates_seeded(
     *,
     n_centroids: int = 16,
     n_probe: int = 4,
-    est_pairs: int | None = None,
 ) -> DataFrame:
     """Deterministic IVF candidate generation + cosine scoring — the
     ORACLE-REPLAYABLE index: centroids are SEEDED (embeddings of the
@@ -527,36 +525,24 @@ def ivf_candidates_seeded(
     assigned = assign_clusters(corpus, cents).select(
         "vec_id", "embedding", "cluster"
     )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
     cand_arr = F.expr(
         "array("
         + ", ".join(
-            f"named_struct('d2', {d2_lit_sql('qv', c)}, 'cluster', {i})"
+            f"named_struct('d2', {d2_lit_sql('embedding', c)}, 'cluster', {i})"
             for i, c in enumerate(cents)
         )
         + ")"
     )
-    probes = q.select(
-        "query_id",
-        "qv",
-        F.explode(F.slice(F.array_sort(cand_arr), 1, n_probe)).alias("p"),
-    ).select("query_id", "qv", F.col("p.cluster").alias("cluster"))
-    return (
-        assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            # pair-count-adaptive scoring (see _pair_cosine / ivf_topk)
-            _pair_cosine(F.col("qv"), F.col("embedding"), est_pairs).alias(
-                "cosine"
-            ),
-        )
-        .distinct()  # probe lists are distinct clusters, but keep the
-        # trained-path invariant explicit: one row per (query, vec)
-    )
+    probes = F.slice(F.array_sort(cand_arr), 1, n_probe)["cluster"]
+    return _scored(
+        queries,
+        assigned,
+        lambda q, c: c.join(F.broadcast(q), "cluster"),
+        arrow=_self_query(queries, corpus),
+        q_cols=(F.explode(probes).alias("cluster"),),
+        c_cols=("cluster",),
+    ).distinct()  # probe lists are distinct clusters, but keep the
+    # trained-path invariant explicit: one row per (query, vec)
 
 
 def ivf_topk_seeded(
@@ -566,7 +552,6 @@ def ivf_topk_seeded(
     *,
     n_centroids: int = 16,
     n_probe: int = 4,
-    est_pairs: int | None = None,
 ) -> DataFrame:
     """Top-k over the seeded deterministic IVF index (see
     `ivf_candidates_seeded`) — same (query_id, vec_id, cosine, rank)
@@ -574,11 +559,7 @@ def ivf_topk_seeded(
     DuckDB."""
     return _topk_per_query(
         ivf_candidates_seeded(
-            queries,
-            corpus,
-            n_centroids=n_centroids,
-            n_probe=n_probe,
-            est_pairs=est_pairs,
+            queries, corpus, n_centroids=n_centroids, n_probe=n_probe
         ),
         k,
     )
@@ -671,63 +652,15 @@ def radius_search(
     near-dup mining wants the latter). Returns (query_id, vec_id,
     cosine), unranked.
 
-    Exact path: broadcast query set × corpus scan with the JVM-side
-    dot/norm fold — O(|Q|·|C|) by definition, the oracle form. ANN
-    path: the IVF probe equi-join generates candidates (same index as
-    `ivf_topk`), then the SAME radius filter applies — results are a
-    SUBSET of the exact set structurally (tests pin ann ⊆ exact and
-    full-probe ≡ exact)."""
-    from flink_application_spark.functions.vectors import dot, norm
-
+    Exact path: broadcast query set × corpus scan — O(|Q|·|C|) by
+    definition, the oracle form. ANN path: the IVF probe equi-join
+    generates candidates (`ivf_topk`'s candidate stage), then the SAME
+    radius filter applies — results are a SUBSET of the exact set
+    structurally (tests pin ann ⊆ exact and full-probe ≡ exact)."""
     if use_ann:
-        if centroids is None:
-            centroids = train_centroids(corpus, n_centroids=n_centroids)
-        assign1 = _assign_udf(centroids, 1)
-        c = corpus.select(
-            "vec_id",
-            "embedding",
-            F.element_at(assign1(F.col("embedding")), 1).alias("cluster"),
-        )
-        assignp = _assign_udf(centroids, n_probe)
-        q = queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.explode(assignp(F.col("embedding"))).alias("cluster"),
-        )
-        scored = (
-            c.join(F.broadcast(q), "cluster")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "vec_id",
-                F.round(cosine(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-            )
-            .distinct()  # a (query, vec) pair can meet in several probed lists
-        )
+        scored = _ivf_candidates(queries, corpus, n_centroids, n_probe, centroids)
     else:
-        q = F.broadcast(
-            queries.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qv"),
-                norm(F.col("embedding")).alias("_qn"),
-            )
-        )
-        c = corpus.select(
-            "vec_id", "embedding", norm(F.col("embedding")).alias("_cn")
-        )
-        scored = (
-            c.crossJoin(q)
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "vec_id",
-                F.round(
-                    dot(F.col("qv"), F.col("embedding"))
-                    / (F.col("_qn") * F.col("_cn")),
-                    6,
-                ).alias("cosine"),
-            )
-        )
+        scored = _scored(queries, corpus, _cross)
     return scored.filter(F.col("cosine") >= radius)
 
 
@@ -1011,8 +944,6 @@ def lsh_multiprobe_topk(
     improve). Shape: queries explode to (1+probes) bucket rows,
     equi-join on bucket, ids-only distinct, then one gather join per
     side for scoring — embeddings never ride the candidate shuffle."""
-    from flink_application_spark.functions.vectors import dot, norm, sign_bits
-
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.explode(multiprobe_buckets(F.col("embedding"), n_bits, probes)).alias(
@@ -1026,21 +957,9 @@ def lsh_multiprobe_topk(
         .select("query_id", "vec_id")
         .distinct()
     )
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("_qn"),
-    )
-    cv = corpus.select("vec_id", "embedding", norm(F.col("embedding")).alias("_cn"))
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("qv"), F.col("embedding")) / (F.col("_qn") * F.col("_cn")), 6
-            ).alias("cosine"),
-        )
+    scored = _scored(
+        queries,
+        corpus,
+        lambda q, c: cand.join(F.broadcast(q), "query_id").join(c, "vec_id"),
     )
     return _topk_per_query(scored, k)

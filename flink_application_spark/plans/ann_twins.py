@@ -357,17 +357,9 @@ def q_label_noise_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_seeded,
         label_agreement,
     )
-    from flink_application_spark.plans._memo import corpus_count_cached
 
     emb = _emb(spark, sf_dir)
-    # full corpus as queries → candidate pairs ≈ n · n_probe · (n/k):
-    # the one consumer whose pair volume clears the Arrow-scorer
-    # threshold (~1M at sf0.1 — round-11's 19 s → 5.5 s A/B win). The
-    # estimate reuses the session-cached corpus count (no extra job in
-    # the steady state); every small-query twin keeps the JVM fold.
-    n = corpus_count_cached(spark, emb, sf_dir)
-    est = n * _ANN["n_probe"] * max(n // _ANN["n_centroids"], 1)
-    topk = ivf_topk_seeded(emb, emb, k=5, **_ANN, est_pairs=est)
+    topk = ivf_topk_seeded(emb, emb, k=5, **_ANN)
     return label_agreement(topk, emb.select("vec_id", "label"))
 
 

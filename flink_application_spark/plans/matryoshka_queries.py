@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flink_application_spark.catalog import register_views
-from flink_application_spark.operators.similarity import brute_force_topk_fold
+from flink_application_spark.operators.similarity import brute_force_topk
 from flink_application_spark.plans.registry import register
 
 _DIMS = (8, 16, 32)
@@ -53,10 +53,10 @@ def _truncated(emb: DataFrame, d: int) -> DataFrame:
 
 def matryoshka_recall(emb: DataFrame) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    full = brute_force_topk_fold(queries, emb, k=_K).select("query_id", "vec_id")
+    full = brute_force_topk(queries, emb, k=_K).select("query_id", "vec_id")
     per_dim = []
     for d in _DIMS:
-        trunc = brute_force_topk_fold(
+        trunc = brute_force_topk(
             _truncated(queries, d), _truncated(emb, d), k=_K
         ).select("query_id", "vec_id")
         hits = trunc.join(full, ["query_id", "vec_id"]).count()

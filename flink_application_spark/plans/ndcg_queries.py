@@ -18,7 +18,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flink_application_spark.catalog import register_views
-from flink_application_spark.operators.similarity import brute_force_topk_fold, lsh_ann_topk
+from flink_application_spark.operators.similarity import brute_force_topk, lsh_ann_topk
 from flink_application_spark.plans.registry import register
 
 _K = 5
@@ -117,11 +117,7 @@ FROM idcg i LEFT JOIN dcg d ON d.query_id = i.query_id
 def q_lsh_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
     queries = emb.filter(F.col("vec_id") < _NQ)
-    # small-|Q| consumer (~tens of k pairs): the JVM fold beats the
-    # Arrow matrix path's fixed round-trip here (round-12 same-session
-    # A/B in OPTIMIZATION_r12.md; bit-identical results, pinned by
-    # tests/test_similarity_arrow.py)
-    exact = brute_force_topk_fold(queries, emb, k=_K).withColumnRenamed(
+    exact = brute_force_topk(queries, emb, k=_K).withColumnRenamed(
         "cosine", "gain"
     )
     ann = lsh_ann_topk(queries, emb, k=_K, n_bits=_N_BITS).withColumnRenamed(

@@ -4,10 +4,8 @@ rows-only → oracle-EXACT on the exact-integer recipe
 d² edge scores (order-free — no fold-order pinning needed), md5-ring
 init, (d2 ASC, nbr ASC) tie-breaks, and a FIXED round count that
 unrolls the whole neighbor-of-neighbor loop as MATERIALIZED CTE
-stages in DuckDB. The float twin (`operators/nndescent.py`, Arrow
-cosine) remains the conventional-pipeline path, pinned independently
-by tests/test_nndescent.py; the exact twin's oracle parity is pinned
-by tests/test_nndescent_exact.py AND hash-checked by the driver gate.
+stages in DuckDB. Oracle parity is pinned by
+tests/test_nndescent_exact.py AND hash-checked by the driver gate.
 
 The recall readout publishes the measured number on the driver's
 isotropic random embeddings — the hard regime, not a cherry-pick
@@ -70,8 +68,7 @@ def q_knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
     "approximate graph via the unrolled loop, the exact baseline via "
     "the INTENTIONALLY_QUADRATIC gate-scale cross join; the Spark "
     "exact side is the two-phase Arrow int64 partial-top-k scan). "
-    "The published number for the hard isotropic regime; the "
-    "clustered-data recall contract lives in tests/test_nndescent.py.",
+    "The published number for the hard isotropic regime.",
     tags=("embeddings", "similarity", "knn-graph", "ann", "audit", "exact"),
 )
 def q_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from flink_application_spark.catalog import register_views
 from flink_application_spark.operators.similarity import (
     brute_force_topk,
-    brute_force_topk_fold,
     cosine_near_dup_pairs,
     lsh_ann_topk,
 )
@@ -55,12 +54,7 @@ WHERE rank <= 10
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
-    # |Q| = 5 → ~10k pairs: the small-pair regime where the JVM fold
-    # beats the Arrow matrix path's fixed round-trip (round-12 A/B:
-    # 0.71–0.80 s vs 0.90–1.21 s at sf0.1; bit-identical — pinned by
-    # tests/test_similarity_arrow.py). This also makes the registered
-    # doc literally true again: the embeddings never leave the JVM.
-    return brute_force_topk_fold(emb.filter(F.col("vec_id") < 5), emb, k=10)
+    return brute_force_topk(emb.filter(F.col("vec_id") < 5), emb, k=10)
 
 
 @register(
@@ -497,49 +491,35 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_application_spark.operators.pq import d2_lit_sql
     from flink_application_spark.operators.similarity import (
-        brute_force_topk_fold,
+        _scored,
+        brute_force_topk,
     )
 
     emb = register_views(spark, sf_dir, tables=("embeddings",))["embeddings"]
     emb = emb.filter(F.col("embedding").isNotNull())
     cents = init_centroids(emb, _RC_NC, "vec_id")
     assigned = assign_clusters(emb, cents).select("vec_id", "embedding", "cluster")
-    q = emb.filter(F.col("vec_id") < _RC_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
+    queries = emb.filter(F.col("vec_id") < _RC_NQ)
     # probe ranking: array_sort over (d2, cluster) literal-fold structs —
     # the oracle-proven emb_ivfadc_topk probe shape, sliced to max level
     cands = F.expr(
         "array("
         + ", ".join(
-            f"named_struct('d2', {d2_lit_sql('qv', c)}, 'cluster', {i})"
+            f"named_struct('d2', {d2_lit_sql('embedding', c)}, 'cluster', {i})"
             for i, c in enumerate(cents)
         )
         + ")"
     )
-    probes = q.select(
-        "query_id",
-        "qv",
-        F.posexplode(F.slice(F.array_sort(cands), 1, _RC_MAXP)).alias("pos", "p"),
-    ).select(
-        "query_id",
-        "qv",
-        F.col("p.cluster").alias("cluster"),
-        (F.col("pos") + 1).alias("pr"),
-    )
-    from flink_application_spark.functions.vectors import cosine
-
+    probes = F.slice(F.array_sort(cands), 1, _RC_MAXP)["cluster"]
     # broadcast the |Q|·max_probe probe rows against the corpus-side
     # inverted list (the ivf_topk join shape — no shuffle of vectors)
-    scored = (
-        assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            "pr",
-            F.round(cosine(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-        )
+    scored = _scored(
+        queries,
+        assigned,
+        lambda q, c: c.join(F.broadcast(q), "cluster"),
+        q_cols=(F.posexplode(probes).alias("pos", "cluster"),),
+        c_cols=("cluster",),
+        keep=((F.col("pos") + 1).alias("pr"),),
     )
     levels = scored.withColumn(
         "n_probe", F.explode(F.sequence(F.col("pr"), F.lit(_RC_MAXP)))
@@ -552,14 +532,7 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= _RC_K)
         .select("n_probe", "query_id", "vec_id")
     )
-    # exact side: |Q| = 5 over the corpus ≈ 10k pairs — the same
-    # small-pair regime as the round-12 adaptive IVF scorer, where the
-    # JVM fold beats the Arrow matrix path's fixed round-trip (A/B at
-    # sf0.1: fold 0.71–0.80 s vs arrow 0.90–1.21 s; bit-identical
-    # results, pinned by tests/test_similarity_arrow.py)
-    exact = brute_force_topk_fold(q.select(F.col("query_id").alias("vec_id"),
-                                           F.col("qv").alias("embedding")),
-                                  emb, k=_RC_K).select(
+    exact = brute_force_topk(queries, emb, k=_RC_K).select(
         "query_id", "vec_id", F.lit(1).alias("hit")
     )
     return (
@@ -742,9 +715,10 @@ GROUP BY a.n_probes
     tags=("similarity", "embeddings", "lsh", "multiprobe", "eval"),
 )
 def q_multiprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_application_spark.functions.vectors import dot, norm, sign_bits
+    from flink_application_spark.functions.vectors import sign_bits
     from flink_application_spark.operators.similarity import (
-        brute_force_topk_fold,
+        _scored,
+        brute_force_topk,
         multiprobe_buckets,
     )
 
@@ -763,23 +737,11 @@ def q_multiprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.min("j").cast("bigint").alias("first_probe"))
     )
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("_qn"),
-    )
-    cv = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("_cn"))
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "first_probe",
-            F.round(
-                dot(F.col("qv"), F.col("embedding")) / (F.col("_qn") * F.col("_cn")), 6
-            ).alias("cosine"),
-        )
+    scored = _scored(
+        queries,
+        emb,
+        lambda q, c: cand.join(F.broadcast(q), "query_id").join(c, "vec_id"),
+        keep=("first_probe",),
     )
     levels = scored.select(
         "query_id",
@@ -797,11 +759,7 @@ def q_multiprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= _MPC_K)
         .select("n_probes", "query_id", "vec_id")
     )
-    # small-|Q| consumer (~tens of k pairs): the JVM fold beats the
-    # Arrow matrix path's fixed round-trip here (round-12 same-session
-    # A/B in OPTIMIZATION_r12.md; bit-identical results, pinned by
-    # tests/test_similarity_arrow.py)
-    exact = brute_force_topk_fold(queries, emb, k=_MPC_K).select(
+    exact = brute_force_topk(queries, emb, k=_MPC_K).select(
         "query_id", F.col("vec_id").alias("x_vec_id")
     )
     return (

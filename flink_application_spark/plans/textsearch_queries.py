@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flink_application_spark.catalog import register_views
 from flink_application_spark.functions.vectors import norm
-from flink_application_spark.operators.similarity import brute_force_topk_fold
+from flink_application_spark.operators.similarity import brute_force_topk
 from flink_application_spark.plans.registry import register
 from flink_application_spark.plans.vectorize_queries import (
     _oracle_sql,
@@ -73,8 +73,4 @@ def q_text_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"), "embedding")
         .filter(F.col("embedding").isNotNull() & (norm(F.col("embedding")) > 0))
     )
-    # small-|Q| consumer (~tens of k pairs): the JVM fold beats the
-    # Arrow matrix path's fixed round-trip here (round-12 same-session
-    # A/B in OPTIMIZATION_r12.md; bit-identical results, pinned by
-    # tests/test_similarity_arrow.py)
-    return brute_force_topk_fold(vecs.filter(F.col("vec_id") < _N_QUERIES), vecs, k=_K)
+    return brute_force_topk(vecs.filter(F.col("vec_id") < _N_QUERIES), vecs, k=_K)

@@ -1,6 +1,7 @@
-"""Arrow brute-force scoring must be BIT-IDENTICAL to the JVM fold
-form — same left-to-right accumulation order, same IEEE division,
-same HALF_UP round, NaN→NULL for null/ragged embeddings. The fold
+"""The two cosine backends of operators/similarity.py must be
+BIT-IDENTICAL — same left-to-right accumulation order, same IEEE
+division, same HALF_UP round, NULL for null/ragged/zero-norm
+embeddings — and the backend must follow the self-query rule. The fold
 form is the arithmetic reference (same pattern as the kmeans/pq
 fold-vs-arrow pins)."""
 
@@ -10,8 +11,9 @@ import pytest
 
 from flink_application_spark.catalog import load_table
 from flink_application_spark.operators.similarity import (
+    _brute_arrow,
+    _brute_fold,
     brute_force_topk,
-    brute_force_topk_fold,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -26,9 +28,7 @@ def _rows(df):
 def test_arrow_equals_fold_on_driver_embeddings(spark):
     emb = load_table(spark, SF, "embeddings")
     q = emb.filter(emb.vec_id < 8)
-    assert _rows(brute_force_topk(q, emb, k=7)) == _rows(
-        brute_force_topk_fold(q, emb, k=7)
-    )
+    assert _rows(_brute_arrow(q, emb, 7)) == _rows(_brute_fold(q, emb, 7))
 
 
 def test_arrow_equals_fold_with_null_and_ragged_embeddings(spark):
@@ -41,12 +41,29 @@ def test_arrow_equals_fold_with_null_and_ragged_embeddings(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
     q = df.filter(df.vec_id.isin(0, 2))
-    got = _rows(brute_force_topk(q, df, k=4))
-    want = _rows(brute_force_topk_fold(q, df, k=4))
+    got = _rows(_brute_arrow(q, df, 4))
+    want = _rows(_brute_fold(q, df, 4))
     assert got == want
     # the NULL-query and NULL/ragged-corpus pairs must be NULL, not NaN
     nulls = [t for t in got if t[2] is None]
     assert nulls, "expected NULL cosines for the null-embedding query"
+
+
+def test_backends_drop_null_ids_alike(spark):
+    """A NULL id on either side must not come back as a neighbor (the
+    Arrow kernel once emitted it as -2^63 with a real cosine) nor crash
+    the driver-side query collect: both backends drop NULL-id rows."""
+    rows = [
+        (None, [1.0, 0.0]),
+        (1, [0.9, 0.1]),
+        (2, [0.1, 0.9]),
+        (3, [0.5, 0.5]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    got = _rows(_brute_arrow(df, df, 3))
+    assert got == _rows(_brute_fold(df, df, 3))
+    assert {t[0] for t in got} == {1, 2, 3}
+    assert {t[1] for t in got} == {1, 2, 3}
 
 
 def test_cosine_arrow_bit_equals_fold_pairwise(spark):
@@ -135,15 +152,13 @@ def test_ivf_seeded_scorer_unchanged_by_arrow_swap(spark):
 
 
 def test_cosine_arrow_degenerate_vectors_yield_null(spark):
-    """Round-11 ADVICE: zero-norm and empty vectors are where the
-    Arrow path DIVERGES from the fold — the ANSI fold throws
-    DIVIDE_BY_ZERO on the 0/0, the Arrow path returns SQL NULL (the
-    NaN is coerced by the pandas Float64 masked array; DuckDB's
-    0/0 → NULL). Pin the intended NULL so the divergence stays
-    documented behavior, not an accident."""
+    """Zero-norm and empty vectors score NULL in both pairwise forms,
+    the Arrow kernel and the fold — DuckDB's 0/0 → NULL — never an ANSI
+    DIVIDE_BY_ZERO (ROADMAP: malformed input must never crash an
+    executor)."""
     from pyspark.sql import functions as F
 
-    from flink_application_spark.functions.vectors import cosine_arrow
+    from flink_application_spark.functions.vectors import cosine, cosine_arrow
 
     rows = [
         (1, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),  # zero-norm left
@@ -154,56 +169,104 @@ def test_cosine_arrow_degenerate_vectors_yield_null(spark):
     df = spark.createDataFrame(
         rows, "pid: long, a: array<double>, b: array<double>"
     )
-    got = {
-        r["pid"]: r["c"]
-        for r in df.select(
-            "pid", cosine_arrow(F.col("a"), F.col("b")).alias("c")
-        ).collect()
-    }
-    assert got[1] is None and got[2] is None and got[3] is None
-    assert got[4] is not None and abs(got[4] - 1.0) < 1e-9
+    for fn in (cosine_arrow, cosine):
+        got = {
+            r["pid"]: r["c"]
+            for r in df.select("pid", fn(F.col("a"), F.col("b")).alias("c")).collect()
+        }
+        assert got[1] is None and got[2] is None and got[3] is None
+        assert got[4] is not None and abs(got[4] - 1.0) < 1e-9
+
+
+def test_topk_scorers_survive_degenerate_corpus_vectors(spark):
+    """A zero vector and an empty array in the corpus score NULL in
+    every top-k / radius / IVF scorer instead of failing the job; the
+    well-formed neighbors keep their cosines."""
+    from pyspark.sql import functions as F
+
+    from flink_application_spark.operators.similarity import (
+        ivf_candidates_seeded,
+        lsh_ann_topk,
+        radius_search,
+    )
+
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.9, 0.1, 0.0]),
+        (2, [0.0, 0.0, 0.0]),  # zero norm
+        (3, []),               # empty
+        (4, [-1.0, 0.2, 0.0]),
+        (5, [0.3, 0.3, 0.3]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    q = df.filter(F.col("vec_id") < 2)
+    want = _rows(_brute_fold(q, df, 5))
+    assert want == _rows(_brute_arrow(q, df, 5))
+    assert {t[1] for t in want if t[2] is None} == {2, 3}
+
+    def cos(df):
+        return {(r["query_id"], r["vec_id"]): r["cosine"] for r in df.collect()}
+
+    exact = {(t[0], t[1]): t[2] for t in want}
+    for got in (
+        cos(lsh_ann_topk(q, df, k=5, n_bits=2)),
+        cos(radius_search(q, df, -1.0)),
+        cos(ivf_candidates_seeded(q, df, n_centroids=2, n_probe=2)),
+    ):
+        assert got and all(exact[p] == c for p, c in got.items() if c is not None)
+        assert all(p[1] in (2, 3) for p, c in got.items() if c is None)
 
 
 def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_ivf_scorer_is_pair_count_adaptive(spark):
-    """Round-11 verdict item 1: the scorer backend must follow the
-    estimated candidate-pair count — JVM fold (no Python boundary) for
-    small consumers, Arrow only above ARROW_SCORER_MIN_PAIRS — and the
-    two backends must return identical rows either way."""
+def test_backend_follows_self_query_rule(spark):
+    """The one backend rule: the Arrow scorer node (MapInPandas for
+    brute force, the `_cos` pandas_udf for IVF) appears only when the
+    query set IS the corpus; a query batch — even one holding every
+    corpus row under a different plan — runs the JVM fold. Rows are
+    equal either way. (The IVF centroid-assignment UDF contributes its
+    own ArrowEvalPython in every variant — the scorer is the node that
+    switches.)"""
     from pyspark.sql import functions as F
 
     from flink_application_spark.operators.similarity import (
-        ARROW_SCORER_MIN_PAIRS,
         ivf_candidates_seeded,
     )
 
     emb = load_table(spark, SF, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    q = emb.filter(F.col("vec_id") < 5)
-    fold_default = ivf_candidates_seeded(q, emb, n_centroids=16, n_probe=4)
-    fold_small = ivf_candidates_seeded(
-        q, emb, n_centroids=16, n_probe=4,
-        est_pairs=ARROW_SCORER_MIN_PAIRS - 1,
-    )
-    arrow_big = ivf_candidates_seeded(
-        q, emb, n_centroids=16, n_probe=4,
-        est_pairs=ARROW_SCORER_MIN_PAIRS,
-    )
-    # plan shape: the _cos Arrow scorer must be absent below the
-    # threshold (or with no estimate) and present at/above it. (The
-    # centroid-assignment UDF contributes its own ArrowEvalPython in
-    # every variant — the scorer is the node that switches.)
-    assert "_cos(" not in _physical(fold_default)
-    assert "_cos(" not in _physical(fold_small)
-    assert "_cos(" in _physical(arrow_big)
-    # value equality: the backend choice can never change results
-    rows_fold = sorted(map(tuple, fold_default.collect()))
-    rows_arrow = sorted(map(tuple, arrow_big.collect()))
-    assert rows_fold == rows_arrow and len(rows_fold) > 0
+    batch = emb.filter(F.lit(True))  # same rows, different plan
+    for build, node in (
+        (lambda q: brute_force_topk(q, emb, k=5), "MapInPandas"),
+        (lambda q: ivf_candidates_seeded(q, emb, n_centroids=16, n_probe=4), "_cos("),
+    ):
+        arrow, fold = build(emb), build(batch)
+        assert node in _physical(arrow)
+        assert node not in _physical(fold)
+        assert node not in _physical(build(emb.filter(F.col("vec_id") < 5)))
+        rows = sorted(map(tuple, arrow.collect()))
+        assert rows == sorted(map(tuple, fold.collect())) and rows
+
+
+@pytest.mark.parametrize(
+    "name,python_scorer",
+    [
+        ("emb_knn_classify", False),
+        ("emb_mmr_diversified_topk", False),
+        ("emb_label_noise_knn", True),
+        ("emb_label_noise_knn_ann", True),
+    ],
+)
+def test_registered_scorer_backends(spark, name, python_scorer):
+    """Registry-level pins of the rule: the bounded query batches score
+    on the fold; the full-corpus label-noise audits score in Arrow."""
+    from flink_application_spark.plans.registry import REGISTRY_GET
+
+    plan = _physical(REGISTRY_GET(name).spark(spark, SF))
+    assert ("MapInPandas" in plan or "_cos(" in plan) == python_scorer
 
 
 def test_topk_rank_and_tiebreak(spark):
